@@ -17,11 +17,13 @@ size estimate (``optimizedPlan().stats().sizeInBytes`` — no job, available
 before execution) at ``MICRO_BYTES_PER_PARTITION`` per partition, clamped
 to the session's configured count.  Inputs at deployment scale therefore
 keep the session conf unchanged — this is the same measured-size
-discipline ``operators/cc.py::connected_components`` applies to its loop
-(there from the exact edge count; here from the only size signal that
+discipline ``operators/cc.py::connected_components`` applies to its star
+loop (there from the exact edge count; here from the only size signal that
 exists before the first action).  Small inputs run under a cloned session
-(same SparkContext, AQE and all other conf inherited) via the zero-copy
-``_rebind`` handoff.
+on the same SparkContext via the zero-copy ``_rebind`` handoff.
+``newSession()`` starts from the builder-time (SparkContext) conf only: a
+value the caller set at runtime with ``spark.conf.set`` is NOT inherited,
+except the partition count and ANSI flag set explicitly below.
 """
 
 from __future__ import annotations

@@ -48,8 +48,10 @@ def run_pipeline(df: DataFrame, cfg: DedupConfig) -> DataFrame:
     """(id_col, cluster_id, cluster_size) for every input row.
 
     cluster_id = min id of the near-duplicate component (deterministic,
-    partitioning-invariant); singletons are their own cluster; components
-    below cfg.min_support get NULL cluster_id.  When
+    partitioning-invariant) and cluster_size = its number of distinct ids,
+    so a repeated input id repeats its row without growing its cluster;
+    singletons are their own cluster; components below cfg.min_support get
+    NULL cluster_id.  When
     cfg.substring_min_len is set, exact-substring-duplicate pairs (op 23)
     are OR-merged into the edge list before clustering.  When
     cfg.content_filter is set (op 15), rows failing the predicate never
@@ -160,7 +162,7 @@ def run_pipeline_clips(
 ) -> DataFrame:
     """Full clips flow: dedup on (clip_id, transcript) only, then re-join
     cluster labels onto the COMPLETE rows (bytes included) for the final
-    output table.
+    output table.  Labels follow ``run_pipeline``'s contract.
 
     The binary column never enters the dedup plan (pruned at the scan) and
     touches exactly one join at the end.  That join must not shuffle the

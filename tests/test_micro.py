@@ -111,16 +111,31 @@ def test_exact_jaccard_and_audio_rows_invariant_under_micro(spark, wide):
     assert _rows(audio_dedup_clusters(cs)) == _rows(audio_dedup_clusters(cw))
 
 
-def test_streaming_attach_rebuild_invariant_under_micro(spark, wide, tmp_path):
+def test_streaming_attach_rebuild_invariant_under_micro(
+    spark, wide, tmp_path, monkeypatch
+):
     """attach_batch + rebuild_index produce identical labels under a wide
     (micro-active) session and the pytest (micro-inactive) session; the
-    micro path hands caller-session frames back to the epoch sinks."""
+    micro path hands caller-session frames, the driver-built CC labels
+    among them, back to the epoch sinks.  Batches are parquet-backed, as a
+    file stream's are: a createDataFrame batch has no finite size estimate
+    and would never take the micro branch."""
     from lsh_hdc_spark.streaming import (
         StreamIndex,
         attach_batch,
+        ingest,
         rebuild_index,
         write_index_epoch,
     )
+
+    rebound = []
+
+    def spy(df):
+        out, micro = micro_rebound(df)
+        rebound.append((df.sparkSession, micro))
+        return out, micro
+
+    monkeypatch.setattr(ingest, "micro_rebound", spy)
 
     cfg = DedupConfig()
     rows = [
@@ -139,10 +154,13 @@ def test_streaming_attach_rebuild_invariant_under_micro(spark, wide, tmp_path):
         )
         labels_all = []
         for k in range(2):
-            b = sess.createDataFrame(
+            path = str(base / f"batch{k}")
+            spark.createDataFrame(
                 [r for i, r in enumerate(rows) if i % 2 == k], schema
-            )
-            labels, new_rows = attach_batch(b, cfg, index)
+            ).write.parquet(path)
+            rebound.clear()
+            labels, new_rows = attach_batch(sess.read.parquet(path), cfg, index)
+            assert rebound == [(sess, sess is wide)]
             # outputs must belong to the CALLER's session (sink contract)
             assert labels.sparkSession is sess
             assert new_rows.sparkSession is sess
