@@ -1,26 +1,22 @@
 """Structured-Streaming incremental dedup on the AUDIO axis — the payload
-twin of ingest.py (graft cell: pyspark x audio, BASELINE.json).
+twin of ingest.py's text axis (graft cell: pyspark x audio, BASELINE.json).
 
-ingest.py attaches new arrivals by TRANSCRIPT (shingle/MinHash band keys,
-Jaccard verify); this module attaches them by SOUND, with the same index
-layout, the same greedy adopt semantics, and the same shuffle discipline:
+New arrivals attach by SOUND through the shared core in ingest.py (index
+layout, greedy adopt, leases, crash-safe swap); what is specific to this
+axis is:
 
-    per micro-batch
-      audio_signatures  (ONE Arrow pass over the batch's byte column:
-                         multi-probe bucket keys + SPEC_BINS spectral
-                         profile, operators/audio_dedup.py)
-        -> in-batch bucket pairs + decoded-PCM SNR verify + CC   (novel
-           dup groups arriving together co-cluster immediately — bytes
-           are in hand for the batch, so the strong time-domain
-           criterion applies)
-        -> bucket-key stream-static join against the pre-exploded KEY
-           index (ids only)
-        -> distinct (new, indexed) candidates -> fetch the indexed
-           clips' STORED spectral profiles once per pair -> verify by
-           relative-L1 spectral distance <= SPEC_TOL
-        -> per in-batch cluster: adopt the best-matching indexed
-           cluster's label (min distance, ties to the smallest label)
-        -> append labels + the batch's acoustic sketches to the index.
+    sign            audio_signatures — ONE Arrow pass over the batch's byte
+                    column: multi-probe bucket keys + SPEC_BINS spectral
+                    profile (operators/audio_dedup.py)
+    in-batch edges  bucket pairs + decoded-PCM SNR verify (bytes are in
+                    hand for the batch, so the strong time-domain
+                    criterion applies)
+    match verify    relative-L1 distance between the new clip's profile
+                    and the STORED profile <= SPEC_TOL, equal sample
+                    count, both profiles energized; best is the lowest
+                    distance
+    rebuild edges   bucket pairs from the stored keys + the same spectral
+                    verify (audio_sketch_edges; no re-read of audio bytes)
 
 Why the index stores a sketch, not audio: the text index stores shingles_h
 (derived, compact) rather than raw text; the audio index stores the
@@ -34,19 +30,11 @@ threshold), new-vs-index pairs verify with spectral distance calibrated to
 the same operating point (SPEC_TOL = 0.01; -30 dB residual noise perturbs
 the profile by ~0.002 relative-L1, unrelated tone mixtures measure >= 0.597
 on the synth corpus, duplicate families <= 0.0018 — a 5x/60x margin).
-
-Greedy semantics and compaction are inherited verbatim from ingest.py:
-attach never merges two existing clusters; rebuild_audio_index re-runs
-bucket -> spectral-verify -> CC over the ACCUMULATED sketch index (no
-re-read of audio bytes) and swaps corrected labels in with the shared
-crash-safe three-table swap.
 """
 
 from __future__ import annotations
 
-import os
-
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.audio_dedup import (
@@ -55,20 +43,14 @@ from ..operators.audio_dedup import (
     audio_signatures,
     audio_verify_pairs,
 )
-from ..micro import micro_rebound
-from ..operators.cc import _rebind, assign_clusters
 from .ingest import (
-    SEED_EPOCH,
+    Axis,
     StreamIndex,
-    _acquire_rebuild_leases,
-    _adopt_labels,
-    _pfx,
-    _rebuild_tmp,
-    _recover_swap,
-    _release_leases,
+    _attach,
+    _rebuild,
     _run_stream,
-    _swap_index,
-    _write_epoch,
+    _seed,
+    _write_sig_epoch,
 )
 
 #: new-vs-index duplicate criterion: relative-L1 distance between stored
@@ -79,50 +61,7 @@ SPEC_TOL = 0.01
 #: the BASELINE.json per-row invariant threshold, same as the batch path.
 MIN_SNR_DB = 30.0
 
-
-def audio_key_rows(new_rows: DataFrame, id_col: str) -> DataFrame:
-    """Pre-exploded key-index rows (pfx, key, id, cluster_id) for a labeled
-    acoustic-signature frame (the audio twin of ingest.key_rows)."""
-    return new_rows.select(
-        F.col(id_col), "cluster_id", F.explode("keys").alias("key")
-    ).withColumn("pfx", _pfx("key"))
-
-
-def write_audio_epoch(
-    new_rows: DataFrame, index: StreamIndex, id_col: str, epoch: int
-) -> None:
-    """Append one epoch's labeled acoustic sketches to sig_dir + keys_dir
-    (idempotent dynamic-overwrite, see ingest._write_epoch).  `new_rows`
-    must be (id, keys, spec, n_samples, cluster_id)."""
-    _write_epoch(new_rows, index.sig_dir, epoch, ["epoch"])
-    _write_epoch(audio_key_rows(new_rows, id_col), index.keys_dir, epoch, ["epoch", "pfx"])
-
-
-def seed_audio_index(
-    spark: SparkSession,
-    clips: DataFrame,
-    index: StreamIndex,
-    id_col: str = "clip_id",
-    min_snr_db: float = MIN_SNR_DB,
-    bucket_cap: int = BUCKET_CAP,
-) -> DataFrame:
-    """Cluster a base corpus with the BATCH audio pipeline
-    (operators/audio_dedup.py) and lay down the full sketch-index layout
-    (epoch = SEED_EPOCH) — the batch -> streaming migration path, the
-    audio twin of ingest.seed_index.  Returns the labels."""
-    from ..operators.audio_dedup import audio_dedup_clusters
-
-    labels = (
-        audio_dedup_clusters(clips, id_col, min_snr_db, bucket_cap)
-        .select(id_col, "cluster_id")
-        .localCheckpoint(eager=True)
-    )
-    rows = audio_signatures(clips, id_col).join(labels, id_col).select(
-        id_col, "keys", "spec", "n_samples", "cluster_id"
-    )
-    write_audio_epoch(rows, index, id_col, SEED_EPOCH)
-    _write_epoch(labels, index.labels_dir, SEED_EPOCH, ["epoch"])
-    return labels
+AUDIO_KEYS = ("keys", "key")
 
 
 def _spec_distance(a, b):
@@ -154,146 +93,21 @@ def _spec_energized(a, b):
     )
 
 
-def _best_audio_match(
-    sigs: DataFrame, index: StreamIndex, id_col: str, spec_tol: float
-) -> DataFrame:
-    """(id, idx_cluster) — each new clip's best-matching indexed cluster at
-    spectral distance <= spec_tol (and equal sample count); at most one row
-    per new id (min distance, ties to the smallest cluster label).
-
-    Shuffle discipline mirrors ingest._best_index_match: the key join moves
-    ids only, the key index is read pruned to the batch's own pfx
-    partitions, and the stored profiles are fetched AFTER the distinct
-    candidate set — once per (new, indexed) pair."""
-    spark = sigs.sparkSession
-    new_keys = sigs.select(
-        F.col(id_col).alias("_nid"), F.explode("keys").alias("key")
-    ).withColumn("pfx", _pfx("key"))
-
-    pfxs = [r["pfx"] for r in new_keys.select("pfx").distinct().collect()]
-    idx_keys = (
-        index.read_keys(spark)
-        .where(F.col("pfx").isin(pfxs))
-        .select(
-            "pfx",
-            "key",
-            F.col(id_col).alias("_iid"),
-            F.col("cluster_id").alias("_icluster"),
-        )
+def _spec_match(a: Column, b: Column, spec_tol: float) -> tuple[Column, Column]:
+    """(score, verified) for two (spec, n_samples) structs; the score is
+    the negated spectral distance, so the closest match scores highest."""
+    d = _spec_distance(a["spec"], b["spec"])
+    ok = (
+        (a["n_samples"] == b["n_samples"])
+        & _spec_energized(a["spec"], b["spec"])
+        & (d <= F.lit(spec_tol))
     )
-    cand = (
-        new_keys.join(idx_keys, ["pfx", "key"])
-        .select("_nid", "_iid", "_icluster")
-        .distinct()
-    )
-
-    new_arr = sigs.select(
-        F.col(id_col).alias("_nid"),
-        F.col("spec").alias("_nspec"),
-        F.col("n_samples").alias("_nn"),
-    )
-    idx_arr = index.read_sigs(spark).select(
-        F.col(id_col).alias("_iid"),
-        F.col("spec").alias("_ispec"),
-        F.col("n_samples").alias("_in"),
-    )
-    j = cand.join(new_arr, "_nid").join(idx_arr, "_iid")
-    scored = (
-        j.select(
-            "_nid",
-            "_icluster",
-            _spec_distance(F.col("_nspec"), F.col("_ispec")).alias("_d"),
-            (
-                (F.col("_nn") == F.col("_in"))
-                & _spec_energized(F.col("_nspec"), F.col("_ispec"))
-            ).alias("_len_ok"),
-        )
-        .where(F.col("_len_ok") & (F.col("_d") <= F.lit(spec_tol)))
-        .groupBy("_nid", "_icluster")
-        .agg(F.min("_d").alias("_d"))
-    )
-    w = Window.partitionBy("_nid").orderBy(F.asc("_d"), F.asc("_icluster"))
-    return (
-        scored.withColumn("_rk", F.row_number().over(w))
-        .where(F.col("_rk") == 1)
-        .select(F.col("_nid").alias(id_col), F.col("_icluster").alias("idx_cluster"))
-    )
+    return -d, ok
 
 
-def attach_audio_batch(
-    batch: DataFrame,
-    index: StreamIndex,
-    id_col: str = "clip_id",
-    min_snr_db: float = MIN_SNR_DB,
-    bucket_cap: int = BUCKET_CAP,
-    spec_tol: float = SPEC_TOL,
-) -> tuple[DataFrame, DataFrame]:
-    """One micro-batch of incremental audio dedup: returns (labels,
-    new_index_rows), the audio twin of ingest.attach_batch.  Pure batch
-    logic — unit-testable outside a stream and reusable from foreachBatch.
-    The batch's byte column is scanned exactly twice (the signature pass
-    and the in-batch SNR verify's candidate fetch); the index contributes
-    sketches only."""
-    caller = batch.sparkSession
-    sigs = audio_signatures(batch, id_col).localCheckpoint(eager=True)
-    # right-size the per-batch work (micro.py; same handoff discipline as
-    # ingest.attach_batch — outputs are rebound to the caller below).  The
-    # batch frame follows so the SNR verify's byte re-scan and the sketch
-    # joins share one session.
-    sigs, micro = micro_rebound(sigs)
-    spark = sigs.sparkSession
-    if micro:
-        batch = _rebind(batch, spark)
-
-    # in-batch clustering (novel duplicate groups arriving together):
-    # bucket pairs from the already-computed keys, strong SNR verify on
-    # the batch's own bytes
+def _bucket_pairs(sigs: DataFrame, id_col: str, bucket_cap: int) -> DataFrame:
     fps = sigs.select(id_col, F.explode("keys").alias("key"))
-    pairs = audio_candidate_pairs(fps, id_col, bucket_cap)
-    edges = audio_verify_pairs(batch, pairs, id_col, min_snr_db).select("src", "dst")
-    local = assign_clusters(batch.select(id_col), edges, id_col).select(
-        id_col, F.col("cluster_id").alias("local_cluster")
-    )
-
-    if index.exists(spark):
-        best = _best_audio_match(sigs, index, id_col, spec_tol)
-        labels = _adopt_labels(local, best, id_col)
-    else:
-        labels = local.select(id_col, F.col("local_cluster").alias("cluster_id"))
-
-    labels = labels.localCheckpoint(eager=True)
-    new_rows = sigs.join(labels, id_col).select(
-        id_col, "keys", "spec", "n_samples", "cluster_id"
-    )
-    if micro:
-        labels = _rebind(labels, caller)
-        new_rows = _rebind(new_rows, caller)
-    return labels, new_rows
-
-
-def run_audio_attach_stream(
-    spark: SparkSession,
-    source_dir: str,
-    schema: str,
-    index: StreamIndex,
-    checkpoint_dir: str,
-    id_col: str = "clip_id",
-    available_now: bool = True,
-) -> None:
-    """Run the incremental audio ingest over a parquet file stream and
-    block until the trigger drains (ingest.run_attach_stream semantics:
-    checkpointed, idempotent epoch overwrites, stream lease held for the
-    query's lifetime so rebuild_audio_index cannot run concurrently)."""
-
-    def _per_batch(batch: DataFrame, epoch_id: int) -> None:
-        labels, new_rows = attach_audio_batch(batch, index, id_col)
-        _write_epoch(labels, index.labels_dir, epoch_id, ["epoch"])
-        write_audio_epoch(new_rows, index, id_col, epoch_id)
-
-    _run_stream(
-        spark, source_dir, schema, _per_batch, checkpoint_dir, [index],
-        available_now,
-    )
+    return audio_candidate_pairs(fps, id_col, bucket_cap)
 
 
 def audio_sketch_edges(
@@ -307,27 +121,107 @@ def audio_sketch_edges(
     from the stored keys, spectral-distance verify on the stored profiles.
     Used by the rebuilds (audio and fused) — pass a MATERIALIZED `sigs` so
     the signature source is not re-scanned per self-join side."""
-    fps = sigs.select(id_col, F.explode("keys").alias("key"))
-    pairs = audio_candidate_pairs(fps, id_col, bucket_cap)
-    side_a = sigs.select(
-        F.col(id_col).alias("src"),
-        F.col("spec").alias("_sa"),
-        F.col("n_samples").alias("_na"),
-    )
-    side_b = sigs.select(
-        F.col(id_col).alias("dst"),
-        F.col("spec").alias("_sb"),
-        F.col("n_samples").alias("_nb"),
-    )
-    return (
-        pairs.join(side_a, "src")
-        .join(side_b, "dst")
-        .where(
-            (F.col("_na") == F.col("_nb"))
-            & _spec_energized(F.col("_sa"), F.col("_sb"))
-            & (_spec_distance(F.col("_sa"), F.col("_sb")) <= F.lit(spec_tol))
+
+    def side(name: str) -> DataFrame:
+        return sigs.select(
+            F.col(id_col).alias(name), F.struct("spec", "n_samples").alias("_" + name)
         )
+
+    _, ok = _spec_match(F.col("_src"), F.col("_dst"), spec_tol)
+    return (
+        _bucket_pairs(sigs, id_col, bucket_cap)
+        .join(side("src"), "src")
+        .join(side("dst"), "dst")
+        .where(ok)
         .select("src", "dst")
+    )
+
+
+def audio_axis(
+    id_col: str,
+    min_snr_db: float = MIN_SNR_DB,
+    bucket_cap: int = BUCKET_CAP,
+    spec_tol: float = SPEC_TOL,
+) -> Axis:
+    """The sound axis (module docstring)."""
+
+    def batch_edges(sigs: DataFrame, batch: DataFrame) -> DataFrame:
+        pairs = _bucket_pairs(sigs, id_col, bucket_cap)
+        return audio_verify_pairs(batch, pairs, id_col, min_snr_db).select("src", "dst")
+
+    return Axis(
+        sig_cols=("keys", "spec", "n_samples"),
+        keys=AUDIO_KEYS,
+        sign=lambda df: audio_signatures(df, id_col),
+        batch_edges=batch_edges,
+        sig_edges=lambda sigs: audio_sketch_edges(sigs, id_col, bucket_cap, spec_tol),
+        fetch=("spec", "n_samples"),
+        score=lambda n, i: _spec_match(n, i, spec_tol),
+    )
+
+
+def write_audio_epoch(
+    new_rows: DataFrame, index: StreamIndex, id_col: str, epoch: int
+) -> None:
+    """Append one epoch's labeled acoustic sketches to sig_dir + keys_dir
+    (idempotent dynamic-overwrite, see ingest._write_epoch).  `new_rows`
+    must be (id, keys, spec, n_samples, cluster_id)."""
+    _write_sig_epoch(new_rows, index, id_col, epoch, AUDIO_KEYS)
+
+
+def seed_audio_index(
+    spark: SparkSession,
+    clips: DataFrame,
+    index: StreamIndex,
+    id_col: str = "clip_id",
+    min_snr_db: float = MIN_SNR_DB,
+    bucket_cap: int = BUCKET_CAP,
+) -> DataFrame:
+    """Cluster a base corpus with the BATCH audio pipeline
+    (operators/audio_dedup.py) and lay down the full sketch-index layout
+    (epoch = SEED_EPOCH) — the batch -> streaming migration path.  Returns
+    the labels."""
+    from ..operators.audio_dedup import audio_dedup_clusters
+
+    labels = audio_dedup_clusters(clips, id_col, min_snr_db, bucket_cap).select(
+        id_col, "cluster_id"
+    )
+    axis = audio_axis(id_col, min_snr_db, bucket_cap)
+    return _seed(clips, labels, id_col, [(axis, index)])
+
+
+def attach_audio_batch(
+    batch: DataFrame,
+    index: StreamIndex,
+    id_col: str = "clip_id",
+    min_snr_db: float = MIN_SNR_DB,
+    bucket_cap: int = BUCKET_CAP,
+    spec_tol: float = SPEC_TOL,
+) -> tuple[DataFrame, DataFrame]:
+    """One micro-batch of incremental audio dedup: returns (labels,
+    new_index_rows), the audio twin of ingest.attach_batch.  The batch's
+    byte column is scanned exactly twice (the signature pass and the
+    in-batch SNR verify's candidate fetch); the index contributes sketches
+    only."""
+    axis = audio_axis(id_col, min_snr_db, bucket_cap, spec_tol)
+    labels, (rows,) = _attach(batch, id_col, [(axis, index)])
+    return labels, rows
+
+
+def run_audio_attach_stream(
+    spark: SparkSession,
+    source_dir: str,
+    schema: str,
+    index: StreamIndex,
+    checkpoint_dir: str,
+    id_col: str = "clip_id",
+    available_now: bool = True,
+) -> None:
+    """Run the incremental audio ingest over a parquet file stream and
+    block until the trigger drains (ingest.run_attach_stream semantics)."""
+    _run_stream(
+        spark, source_dir, schema, checkpoint_dir, id_col,
+        [(audio_axis(id_col), index)], available_now,
     )
 
 
@@ -339,46 +233,9 @@ def rebuild_audio_index(
     spec_tol: float = SPEC_TOL,
 ) -> None:
     """Offline compaction for greedy-attach drift on the audio axis:
-    re-cluster the ENTIRE accumulated sketch index (bucket pairs from the
-    stored keys, spectral-distance verify on the stored profiles, CC) and
-    swap corrected labels in — merging clusters a bridging arrival should
-    have merged.  Audio bytes are never re-read: the sketches ARE the
-    pipeline input after signing, exactly like the text rebuild running on
-    shingles_h.  Crash safety and the stream lease are shared with
-    ingest.rebuild_index (_swap_index / _recover_swap / the held rebuild
-    lease)."""
-    locks = _acquire_rebuild_leases([index])
-    try:
-        _recover_swap(index)
-        # right-size to the accumulated index's estimated size (micro.py);
-        # the rebuild only writes, so nothing is rebound back
-        sigs_src, _ = micro_rebound(
-            index.read_sigs(spark).select(id_col, "keys", "spec", "n_samples")
-        )
-        spark = sigs_src.sparkSession
-        sigs = sigs_src.localCheckpoint(eager=True)
-        edges = audio_sketch_edges(sigs, id_col, bucket_cap, spec_tol)
-        relabeled = assign_clusters(sigs.select(id_col), edges, id_col).select(
-            id_col, "cluster_id"
-        )
-        # clips whose bytes never decoded have a label row (attach labels
-        # every batch row as a singleton) but no sketch row — re-clustering
-        # from the sketch index alone would silently drop them from the
-        # output table.  They can never have matched anything, so their old
-        # singleton labels are carried over verbatim.
-        if os.path.exists(index.labels_dir):
-            unsketched = index.read_labels(spark).join(
-                sigs.select(id_col), id_col, "left_anti"
-            ).select(id_col, "cluster_id")
-            relabeled = relabeled.unionByName(unsketched)
-        labels = relabeled.localCheckpoint(eager=True)
-        rows = sigs.join(labels, id_col).select(
-            id_col, "keys", "spec", "n_samples", "cluster_id"
-        ).localCheckpoint(eager=True)
-
-        tmp = _rebuild_tmp(index)
-        write_audio_epoch(rows, tmp, id_col, SEED_EPOCH)
-        _write_epoch(labels, tmp.labels_dir, SEED_EPOCH, ["epoch"])
-        _swap_index(index, tmp)
-    finally:
-        _release_leases(locks)
+    re-cluster the ENTIRE accumulated sketch index and swap corrected
+    labels in (ingest.rebuild_index semantics) — audio bytes are never
+    re-read.  Clips whose bytes never decoded have a label row but no
+    sketch row; they keep their singleton labels."""
+    axis = audio_axis(id_col, bucket_cap=bucket_cap, spec_tol=spec_tol)
+    _rebuild(spark, id_col, [(axis, index)])

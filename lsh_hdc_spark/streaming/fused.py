@@ -2,77 +2,39 @@
 operators/audio_dedup.py::fused_dedup_clusters (graft cell: pyspark x
 audio, axes A+B fused).
 
-A micro-batch attaches to ONE shared label space through BOTH modalities:
-
-    in-batch edges   = transcript edges (shingle/MinHash/LSH bucket ->
-                       exact-Jaccard verify) UNION audio edges (spectral
-                       bucket keys -> decoded-PCM SNR verify)  -> one CC
-    index match      = best text match (stored shingles, Jaccard)
-                       UNION best audio match (stored spectral profile,
-                       relative-L1)  -> per in-batch cluster, adopt the
-                       smallest matched label (greedy, never merges)
-    index append     = the batch's text signatures AND acoustic sketches,
-                       labeled identically, plus one shared labels sink.
+The shared core in ingest.py run over BOTH axes: a micro-batch's in-batch
+edges are the union of transcript and audio edges (one CC), its index
+match is the union of the best text match and the best audio match (per
+in-batch cluster, adopt the smallest matched label; greedy, never merges),
+and its append writes the text signatures and the acoustic sketches,
+labeled identically, plus one shared labels sink.
 
 This catches at attach time what either single-axis stream misses: a
 re-voiced arrival (same transcript, unrelated audio) adopts through the
 text index; a re-transcribed arrival (same audio, rewritten transcript)
-adopts through the audio index.  The underlying single-axis machinery is
-reused verbatim — ingest.py's _best_index_match / key layout for text,
-audio_ingest.py's _best_audio_match / sketch layout for audio — so every
-scale property those paths pin (pfx-pruned key scans, ids-only bucket
-shuffles, arrays/profiles fetched once per distinct candidate pair,
-payload bytes in no index table, idempotent epoch overwrites) holds here
-unchanged; PLANS.md §7/§10.
-
-Greedy semantics and compaction are inherited: attach never merges two
-existing clusters (an arrival matching text-cluster X and audio-cluster Y
-adopts min(X, Y) and leaves the other intact); rebuild_fused_index
-re-runs the UNION edge set over the accumulated text signatures + audio
-sketches (no payload re-read) and swaps corrected labels into all five
-tables with the shared crash-safe swap.
+adopts through the audio index.  An arrival matching text-cluster X and
+audio-cluster Y adopts min(X, Y) and leaves the other intact;
+rebuild_fused_index re-clusters over the union edge set of the stored
+text signatures + audio sketches (no payload re-read) and swaps
+corrected labels into all five tables in one marker-guarded swap.
 """
 
 from __future__ import annotations
 
-import os
-
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from ..config import DedupConfig
-from ..functions.sign import signed
-from ..operators.audio_dedup import (
-    BUCKET_CAP,
-    audio_candidate_pairs,
-    audio_signatures,
-    audio_verify_pairs,
-)
-from ..micro import micro_rebound
-from ..operators.cc import _rebind, assign_clusters
-from ..operators.pairs import candidate_pairs, verify_pairs
-from .audio_ingest import (
-    MIN_SNR_DB,
-    SPEC_TOL,
-    _best_audio_match,
-    audio_sketch_edges,
-    write_audio_epoch,
-)
+from ..operators.audio_dedup import BUCKET_CAP
+from .audio_ingest import MIN_SNR_DB, SPEC_TOL, audio_axis, write_audio_epoch
 from .ingest import (
-    SEED_EPOCH,
     StreamIndex,
-    _acquire_rebuild_leases,
-    _adopt_labels,
-    _best_index_match,
-    _rebuild_tmp,
-    _recover_swap,
-    _release_leases,
+    _attach,
+    _rebuild,
     _run_stream,
-    _swap_index,
-    _write_epoch,
-    key_rows,
+    _seed,
+    text_axis,
     write_index_epoch,
 )
 
@@ -98,6 +60,19 @@ class FusedStreamIndex:
     @property
     def labels_dir(self) -> str:
         return self.text.labels_dir
+
+
+def _parts(
+    cfg: DedupConfig,
+    index: FusedStreamIndex,
+    min_snr_db: float = MIN_SNR_DB,
+    bucket_cap: int = BUCKET_CAP,
+    spec_tol: float = SPEC_TOL,
+):
+    return [
+        (text_axis(cfg), index.text),
+        (audio_axis(cfg.id_col, min_snr_db, bucket_cap, spec_tol), index.audio),
+    ]
 
 
 def write_fused_epoch(
@@ -127,21 +102,10 @@ def seed_fused_index(
     the batch -> streaming migration path.  Returns the labels."""
     from ..operators.audio_dedup import fused_dedup_clusters
 
-    iid = cfg.id_col
-    labels = (
-        fused_dedup_clusters(clips, cfg, min_snr_db, bucket_cap)
-        .select(iid, "cluster_id")
-        .localCheckpoint(eager=True)
+    labels = fused_dedup_clusters(clips, cfg, min_snr_db, bucket_cap).select(
+        cfg.id_col, "cluster_id"
     )
-    text_rows = signed(clips, cfg).join(labels, iid).select(
-        iid, "shingles_h", "sketch", "band_keys", "cluster_id"
-    )
-    audio_rows = audio_signatures(clips, iid).join(labels, iid).select(
-        iid, "keys", "spec", "n_samples", "cluster_id"
-    )
-    write_fused_epoch(text_rows, audio_rows, index, iid, SEED_EPOCH)
-    _write_epoch(labels, index.labels_dir, SEED_EPOCH, ["epoch"])
-    return labels
+    return _seed(clips, labels, cfg.id_col, _parts(cfg, index, min_snr_db, bucket_cap))
 
 
 def attach_fused_batch(
@@ -157,56 +121,8 @@ def attach_fused_batch(
     outside a stream and reusable from foreachBatch.  The batch's byte
     column is scanned by the audio signature pass and the in-batch SNR
     verify only; neither index contributes anything heavier than sketches."""
-    caller = batch.sparkSession
-    iid = cfg.id_col
-    s_text = signed(batch, cfg).localCheckpoint(eager=True)
-    # right-size the per-batch work (micro.py; same handoff discipline as
-    # ingest.attach_batch — outputs are rebound to the caller below); the
-    # batch and both signature frames share one session
-    s_text, micro = micro_rebound(s_text)
-    spark = s_text.sparkSession
-    if micro:
-        batch = _rebind(batch, spark)
-    s_audio = audio_signatures(batch, iid).localCheckpoint(eager=True)
-
-    # in-batch clustering over the UNION edge set (novel dup groups
-    # arriving together co-cluster through either modality)
-    t_edges = verify_pairs(candidate_pairs(s_text, cfg), s_text, cfg).select(
-        "src", "dst"
-    )
-    fps = s_audio.select(iid, F.explode("keys").alias("key"))
-    a_pairs = audio_candidate_pairs(fps, iid, bucket_cap)
-    a_edges = audio_verify_pairs(batch, a_pairs, iid, min_snr_db).select("src", "dst")
-    edges = t_edges.unionByName(a_edges).distinct()
-    local = assign_clusters(batch.select(iid), edges, iid).select(
-        iid, F.col("cluster_id").alias("local_cluster")
-    )
-
-    # best existing-cluster match per new id, across BOTH indexes
-    matches = []
-    if index.text.exists(spark):
-        matches.append(_best_index_match(s_text, index.text, cfg))
-    if index.audio.exists(spark):
-        matches.append(_best_audio_match(s_audio, index.audio, iid, spec_tol))
-    if matches:
-        best = matches[0]
-        for m in matches[1:]:
-            best = best.unionByName(m)
-        labels = _adopt_labels(local, best, iid)
-    else:
-        labels = local.select(iid, F.col("local_cluster").alias("cluster_id"))
-
-    labels = labels.localCheckpoint(eager=True)
-    text_rows = s_text.join(labels, iid).select(
-        iid, "shingles_h", "sketch", "band_keys", "cluster_id"
-    )
-    audio_rows = s_audio.join(labels, iid).select(
-        iid, "keys", "spec", "n_samples", "cluster_id"
-    )
-    if micro:
-        labels = _rebind(labels, caller)
-        text_rows = _rebind(text_rows, caller)
-        audio_rows = _rebind(audio_rows, caller)
+    parts = _parts(cfg, index, min_snr_db, bucket_cap, spec_tol)
+    labels, (text_rows, audio_rows) = _attach(batch, cfg.id_col, parts)
     return labels, text_rows, audio_rows
 
 
@@ -226,15 +142,9 @@ def run_fused_attach_stream(
     single-axis rebuild_audio_index / rebuild_index directly against a
     fused sub-index — either would swap the SHARED labels table out from
     under the live stream."""
-
-    def _per_batch(b: DataFrame, epoch_id: int) -> None:
-        labels, text_rows, audio_rows = attach_fused_batch(b, cfg, index)
-        _write_epoch(labels, index.labels_dir, epoch_id, ["epoch"])
-        write_fused_epoch(text_rows, audio_rows, index, cfg.id_col, epoch_id)
-
     _run_stream(
-        spark, source_dir, schema, _per_batch, checkpoint_dir,
-        [index.text, index.audio], available_now,
+        spark, source_dir, schema, checkpoint_dir, cfg.id_col,
+        _parts(cfg, index), available_now,
     )
 
 
@@ -250,100 +160,5 @@ def rebuild_fused_index(
     and audio edges (stored sketches, spectral verify) and swap corrected
     labels into all five tables — no payload column is ever re-read.
     Merges everything greedy attach stranded, through either modality."""
-    iid = cfg.id_col
-    locks = _acquire_rebuild_leases([index.text, index.audio])
-    try:
-        _rebuild_fused_locked(spark, cfg, index, bucket_cap, spec_tol)
-    finally:
-        _release_leases(locks)
-
-
-def _rebuild_fused_locked(
-    spark: SparkSession,
-    cfg: DedupConfig,
-    index: FusedStreamIndex,
-    bucket_cap: int,
-    spec_tol: float,
-) -> None:
-    iid = cfg.id_col
-    _recover_swap(index.text)
-    _recover_swap(index.audio)
-    # right-size to the accumulated text index's estimated size (micro.py;
-    # the audio sketch table is the same corpus, smaller rows) — the
-    # rebuild only writes, so nothing is rebound back
-    t_src, _ = micro_rebound(
-        index.text.read_sigs(spark).select(iid, "shingles_h", "sketch", "band_keys")
-    )
-    spark = t_src.sparkSession
-    t_sigs = t_src.localCheckpoint(eager=True)
-    a_sigs = (
-        index.audio.read_sigs(spark)
-        .select(iid, "keys", "spec", "n_samples")
-        .localCheckpoint(eager=True)
-    )
-    t_edges = verify_pairs(candidate_pairs(t_sigs, cfg), t_sigs, cfg).select(
-        "src", "dst"
-    )
-    a_edges = audio_sketch_edges(a_sigs, iid, bucket_cap, spec_tol)
-    edges = t_edges.unionByName(a_edges).distinct()
-    # the CC vertex set is the UNION of both sig tables' ids: an id signed
-    # on only one axis (e.g. undecodable audio keeps it out of a_sigs; a
-    # hypothetical skipping text signer would keep it out of t_sigs) must
-    # still be a vertex, or its fresh edges on the OTHER axis would be
-    # silently discarded and a bridging merge lost
-    vertices = (
-        t_sigs.select(iid).unionByName(a_sigs.select(iid)).distinct()
-    )
-    relabeled = assign_clusters(vertices, edges, iid).select(iid, "cluster_id")
-    # same guard as rebuild_audio_index: any labeled id absent from BOTH
-    # signature tables (the invariant is the label table's, not the
-    # signers') keeps its old singleton label instead of silently
-    # vanishing from the swap
-    if os.path.exists(index.labels_dir):
-        unsigned = spark.read.parquet(index.labels_dir).join(
-            vertices, iid, "left_anti"
-        ).select(iid, "cluster_id")
-        relabeled = relabeled.unionByName(unsigned)
-    labels = relabeled.localCheckpoint(eager=True)
-    text_rows = t_sigs.join(labels, iid).select(
-        iid, "shingles_h", "sketch", "band_keys", "cluster_id"
-    ).localCheckpoint(eager=True)
-    audio_rows = a_sigs.join(labels, iid).select(
-        iid, "keys", "spec", "n_samples", "cluster_id"
-    ).localCheckpoint(eager=True)
-
-    # stage both sub-indexes, then swap text first and audio second; each
-    # swap is individually crash-safe and _recover_swap at the next entry
-    # completes whichever half was interrupted
-    t_tmp = _rebuild_tmp(index.text)
-    a_tmp = _rebuild_tmp(index.audio)
-    write_index_epoch(text_rows, t_tmp, iid, SEED_EPOCH)
-    _write_epoch(labels, t_tmp.labels_dir, SEED_EPOCH, ["epoch"])
-    write_audio_epoch(audio_rows, a_tmp, iid, SEED_EPOCH)
-    _swap_index(index.text, t_tmp)
-    _swap_audio_only(index.audio, a_tmp)
-
-
-def _swap_audio_only(live: StreamIndex, tmp: StreamIndex) -> None:
-    """Swap sig/keys of the audio sub-index without touching the shared
-    labels sink (already swapped with the text half).  Same two-rename
-    crash window as _swap_index."""
-    import os
-    import shutil
-
-    for lv, nw in ((live.sig_dir, tmp.sig_dir), (live.keys_dir, tmp.keys_dir)):
-        old = lv + ".old"
-        shutil.rmtree(old, ignore_errors=True)
-        if os.path.exists(lv):
-            os.rename(lv, old)
-        os.rename(nw, lv)
-        shutil.rmtree(old, ignore_errors=True)
-    # invariant (ADVICE r5): only _swap_index touches the shared labels
-    # table.  No audio labels twin is ever staged (write_audio_epoch
-    # writes sig/keys only), and the staged shared-labels dir was already
-    # renamed live by the preceding text-half swap — tmp.labels_dir must
-    # not exist here, and this function must never delete it.
-    assert not os.path.exists(tmp.labels_dir), (
-        f"fused swap ordering violated: staged labels {tmp.labels_dir} "
-        "still present during the audio-only half"
-    )
+    parts = _parts(cfg, index, bucket_cap=bucket_cap, spec_tol=spec_tol)
+    _rebuild(spark, cfg.id_col, parts)

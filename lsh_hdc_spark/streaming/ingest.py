@@ -2,66 +2,94 @@
 
 The batch pipeline (plans/pipeline.py) rebuilds clusters from scratch; this
 module handles the production steady state instead: a corpus has already
-been clustered, and new items arrive continuously.  Each micro-batch is
+been clustered, and new items arrive continuously.  They attach by
+transcript (this module's text axis), by sound (audio_ingest.py's audio
+axis) or by both (fused.py).  One core here serves all three: it is
+parametrised over a list of ``Axis`` values, each holding what is specific
+to its modality (how a batch is signed, its signature and key columns,
+its in-batch and stored-signature edges, its match verify).  Each
+micro-batch is
 
-    sign (stateless mapInPandas — streaming-safe)
-      -> in-batch candidate pairs + Jaccard verify + CC   (novel dup groups
-         arriving together co-cluster immediately)
-      -> band-key stream-static join against the pre-exploded KEY index
-         (ids only — no arrays cross this shuffle)
-      -> distinct (new_id, index_id) candidates -> fetch shingle arrays
-         ONCE per pair -> exact-Jaccard verify
+    sign per axis (stateless mapInPandas — streaming-safe)
+      -> in-batch candidate pairs + verify per axis, UNION -> one CC
+         (novel dup groups arriving together co-cluster immediately)
+      -> per axis: key stream-static join against the pre-exploded KEY
+         index (ids only — no arrays cross this shuffle)
+      -> distinct (new_id, index_id) candidates -> fetch the verify
+         columns ONCE per pair -> the axis's verify and score
       -> per in-batch cluster: adopt the best-matching indexed cluster's
-         label (max jaccard, ties to the smallest label), else keep the
-         in-batch label
-      -> append labels + the batch's signatures + band keys to the index
+         label, else keep the in-batch label
+      -> append labels + the batch's signatures + keys to the index
          (so LATER batches can match THIS batch's items).
 
 Semantics vs a full rebuild: attach is greedy — a new item can merge into
 exactly one existing cluster, and two existing clusters are never merged by
-a bridging arrival.  The compaction path is ``rebuild_index``: run the
-batch candidate/verify/CC machinery over the accumulated signature index
-and swap the corrected labels in (same trade as any streaming union-find).
+a bridging arrival.  When members of one in-batch cluster match different
+indexed clusters (on one axis or across axes), the smallest label wins and
+the clusters stay apart.  The compaction path is ``rebuild_index`` (and its
+audio/fused twins): run the candidate/verify/CC machinery over the
+accumulated signature index and swap the corrected labels in (same trade
+as any streaming union-find).
 
 Scale design (10^12-row index, SURVEY.md §4):
- - the index is THREE tables, so the heavy things never meet a shuffle
-   they don't need:
-     keys_dir   (pfx, band_key, id, cluster_id)  — pre-exploded band keys,
-                directory-partitioned by pfx = hash(band_key) % N; the
+ - each axis's index is THREE tables, so the heavy things never meet a
+   shuffle they don't need:
+     keys_dir   (pfx, key, id, cluster_id)  — pre-exploded keys,
+                directory-partitioned by pfx = hash(key) % N; the
                 stream-static join probes THIS table only.  In production
-                this layout is Iceberg `bucket(N, band_key)` and the join
+                this layout is Iceberg `bucket(N, key)` and the join
                 is storage-partitioned (SPJ): the index side never
                 shuffles, only the micro-batch side is routed to buckets.
                 Under plain parquet (no Iceberg jar offline) the same
                 layout gives partition PRUNING: each batch reads only the
-                pfx partitions its own band keys hash into.
-     sig_dir    (id, shingles_h, sketch, band_keys, cluster_id) — the
-                arrays, keyed by id; joined only against the DISTINCT
-                candidate-id set (the verify_pairs/ann_topk pattern from
-                operators/pairs.py), so an index row's array is fetched at
-                most once per batch, never per band key.  Store bucketed
-                by id in production so this join is also storage-
-                partitioned.
-     labels_dir (id, cluster_id) — the output stream.
+                pfx partitions its own keys hash into.
+     sig_dir    (id, signature columns, cluster_id) — the arrays, keyed by
+                id; joined only against the DISTINCT candidate-id set (the
+                verify_pairs/ann_topk pattern from operators/pairs.py), so
+                an index row's array is fetched at most once per batch,
+                never per key.  Store bucketed by id in production so this
+                join is also storage-partitioned.
+     labels_dir (id, cluster_id) — the output stream, one per label space
+                (a fused index's two axes share it).
  - payload columns (text, audio bytes) never enter any streaming plan;
  - exactly-once: the per-batch step runs inside foreachBatch under a
-   checkpointLocation, and all three sinks are partitioned by epoch and
+   checkpointLocation, and all sinks are partitioned by epoch and
    written with dynamic partition overwrite — a retried epoch REPLACES its
    own partitions instead of appending duplicates, making the parquet path
    idempotent end-to-end.  (A transactional format — Iceberg — additionally
-   makes the three writes one atomic commit; with plain parquet a crash
-   BETWEEN the three writes of one epoch leaves partials that the retry
-   then overwrites, so the window is self-healing but not atomic.)
+   makes the writes one atomic commit; with plain parquet a crash BETWEEN
+   the writes of one epoch leaves partials that the retry then overwrites,
+   so the window is self-healing but not atomic.)
  - backfill = the same code path under trigger(availableNow=True).
+
+Leases: a stream holds an O_EXCL lease file beside each of its sig_dirs
+for its whole lifetime, from before .start() (a failed start releases it);
+a rebuild holds the same lease for its whole duration.  So attach-vs-
+rebuild and rebuild-vs-rebuild fail fast in either order, and a fused
+stream holds both axes' leases, which also fences a single-axis rebuild
+run against one of its sub-indexes.
+
+Swap: a rebuild stages every table it replaces as ``<live>.rebuild``,
+then writes a marker beside the labels dir listing the staged -> live
+pairs, then swaps each pair (live -> .old, staged -> live, delete .old).
+Recovery runs at every rebuild and stream start: with the marker present
+it finishes every remaining pair, so no crash point leaves new
+signatures beside old labels or one axis swapped and the other stale;
+with the marker absent it discards staged dirs (staging never finished).
+Production: one atomic Iceberg REPLACE commit across the tables.
 """
 
 from __future__ import annotations
 
+import glob
+import json
 import os
 import shutil
 from dataclasses import dataclass
+from functools import partial, reduce
+from typing import Callable
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..config import DedupConfig
@@ -70,17 +98,14 @@ from ..micro import micro_rebound
 from ..operators.cc import _rebind, assign_clusters
 from ..operators.pairs import candidate_pairs, verify_pairs
 
-#: band-key hash-partition fanout for keys_dir (plain-parquet stand-in for
-#: Iceberg bucket(N, band_key)).  64 keeps directory counts sane at sandbox
+#: key hash-partition fanout for keys_dir (plain-parquet stand-in for
+#: Iceberg bucket(N, key)).  64 keeps directory counts sane at sandbox
 #: scale; a 10^12-row deployment would use 4096+ Iceberg buckets.
 N_KEY_PARTITIONS = 64
 
-#: epoch used for pre-stream seeding and rebuild_index output (real stream
+#: epoch used for pre-stream seeding and rebuild output (real stream
 #: epochs are >= 0)
 SEED_EPOCH = -1
-
-#: keys_dirs confirmed present (see StreamIndex.exists)
-_EXISTS_MEMO: set[str] = set()
 
 
 def _pfx(col):
@@ -89,9 +114,9 @@ def _pfx(col):
 
 @dataclass(frozen=True)
 class StreamIndex:
-    """On-disk state the stream attaches to (see module docstring for the
-    three-table layout).  All three are plain parquet here, partitioned by
-    epoch (keys_dir additionally by pfx); the layout contract is
+    """On-disk state of one axis (see module docstring for the three-table
+    layout).  All three are plain parquet here, partitioned by epoch
+    (keys_dir additionally by pfx); the layout contract is
     epoch-partitioned dynamic overwrite — append-only across epochs,
     idempotent within one."""
 
@@ -99,19 +124,15 @@ class StreamIndex:
     labels_dir: str
     keys_dir: str
 
-    def exists(self, spark: SparkSession) -> bool:
-        # memoized once true: an index never un-exists while a stream is
-        # attached to it (rebuilds swap directory contents, not presence),
-        # and the per-batch probe was a driver-side file listing + footer
-        # read repeated every micro-batch of a long-running stream
-        if self.keys_dir in _EXISTS_MEMO:
-            return True
-        try:
-            spark.read.parquet(self.keys_dir).schema
-            _EXISTS_MEMO.add(self.keys_dir)
-            return True
-        except Exception:
-            return False
+    def exists(self) -> bool:
+        """True when keys_dir holds a committed data file.  Checked per
+        call from the filesystem, so an index deleted or recreated at the
+        same path reads as it is now; a keys dir with no committed file
+        (staging dirs are dot-prefixed) reads as absent."""
+        pattern = os.path.join(
+            glob.escape(self.keys_dir), "epoch=*", "pfx=*", "*.parquet"
+        )
+        return next(glob.iglob(pattern), None) is not None
 
     def read_keys(self, spark: SparkSession) -> DataFrame:
         return spark.read.parquet(self.keys_dir)
@@ -123,12 +144,54 @@ class StreamIndex:
         return spark.read.parquet(self.labels_dir)
 
 
-def key_rows(new_rows: DataFrame, id_col: str) -> DataFrame:
-    """Pre-exploded key-index rows (pfx, band_key, id, cluster_id) for a
-    labeled signature frame."""
-    return new_rows.select(
-        F.col(id_col), "cluster_id", F.explode("band_keys").alias("band_key")
-    ).withColumn("pfx", _pfx("band_key"))
+@dataclass(frozen=True)
+class Axis:
+    """What one modality contributes to the attach/seed/rebuild core."""
+
+    #: signature columns stored in sig_dir, after the id
+    sig_cols: tuple[str, ...]
+    #: (key-array column in sig_dir, its exploded column in keys_dir)
+    keys: tuple[str, str]
+    #: batch -> (id, *sig_cols, ...), one row per signable batch row
+    sign: Callable[[DataFrame], DataFrame]
+    #: (signed batch, batch) -> verified in-batch (src, dst) edges
+    batch_edges: Callable[[DataFrame, DataFrame], DataFrame]
+    #: stored signatures -> verified (src, dst) edges, for the rebuild
+    sig_edges: Callable[[DataFrame], DataFrame]
+    #: columns the index match fetches per candidate pair, as one struct
+    fetch: tuple[str, ...]
+    #: (new struct, indexed struct) -> (score, verified); higher is better
+    score: Callable[[Column, Column], tuple[Column, Column]]
+
+
+TEXT_KEYS = ("band_keys", "band_key")
+
+
+def text_axis(cfg: DedupConfig) -> Axis:
+    """The transcript axis: shingle/MinHash band keys, exact-Jaccard
+    verify on the shingles (the batch pipeline's pair path, in-batch and
+    on the stored signatures alike)."""
+
+    def edges(sigs: DataFrame, batch: DataFrame | None = None) -> DataFrame:
+        return verify_pairs(candidate_pairs(sigs, cfg), sigs, cfg).select("src", "dst")
+
+    def jaccard(n: Column, i: Column) -> tuple[Column, Column]:
+        a = F.array_distinct(n["shingles_h"])
+        b = F.array_distinct(i["shingles_h"])
+        inter = F.size(F.array_intersect(a, b))
+        union = F.size(a) + F.size(b) - inter
+        jac = inter.cast("double") / F.greatest(union, F.lit(1)).cast("double")
+        return jac, jac >= F.lit(cfg.resolved_jaccard_threshold)
+
+    return Axis(
+        sig_cols=("shingles_h", "sketch", "band_keys"),
+        keys=TEXT_KEYS,
+        sign=lambda df: signed(df, cfg),
+        batch_edges=edges,
+        sig_edges=edges,
+        fetch=("shingles_h",),
+        score=jaccard,
+    )
 
 
 def _write_epoch(df: DataFrame, path: str, epoch: int, parts: list[str]) -> None:
@@ -154,14 +217,49 @@ def _write_epoch(df: DataFrame, path: str, epoch: int, parts: list[str]) -> None
     )
 
 
+def _write_sig_epoch(
+    rows: DataFrame, index: StreamIndex, id_col: str, epoch: int, keys: tuple[str, str]
+) -> None:
+    """Append one epoch's labeled signatures to sig_dir, and their
+    pre-exploded key rows (pfx, key, id, cluster_id) to keys_dir."""
+    arr, key = keys
+    key_rows = rows.select(
+        F.col(id_col), "cluster_id", F.explode(arr).alias(key)
+    ).withColumn("pfx", _pfx(key))
+    _write_epoch(rows, index.sig_dir, epoch, ["epoch"])
+    _write_epoch(key_rows, index.keys_dir, epoch, ["epoch", "pfx"])
+
+
 def write_index_epoch(
     new_rows: DataFrame, index: StreamIndex, id_col: str, epoch: int
 ) -> None:
     """Append one epoch's labeled signatures to sig_dir + keys_dir
     (idempotently).  `new_rows` must be (id, shingles_h, sketch, band_keys,
     cluster_id)."""
-    _write_epoch(new_rows, index.sig_dir, epoch, ["epoch"])
-    _write_epoch(key_rows(new_rows, id_col), index.keys_dir, epoch, ["epoch", "pfx"])
+    _write_sig_epoch(new_rows, index, id_col, epoch, TEXT_KEYS)
+
+
+#: (axis, its sub-index) pairs; every sub-index shares one labels_dir
+Parts = list[tuple[Axis, StreamIndex]]
+
+
+def _union(frames: list[DataFrame]) -> DataFrame:
+    """unionByName over the axes' frames, deduplicated when more than one
+    axis contributes (a pair can verify, an id be signed, on both)."""
+    out = reduce(DataFrame.unionByName, frames)
+    return out.distinct() if len(frames) > 1 else out
+
+
+def _seed(df: DataFrame, labels: DataFrame, id_col: str, parts: Parts) -> DataFrame:
+    """Lay down the full index layout for a batch-clustered base corpus
+    (epoch = SEED_EPOCH) from its `labels`; returns them materialized."""
+    labels = labels.localCheckpoint(eager=True)
+    ids = labels.select(id_col, "cluster_id")
+    for ax, ix in parts:
+        rows = ax.sign(df).join(ids, id_col).select(id_col, *ax.sig_cols, "cluster_id")
+        _write_sig_epoch(rows, ix, id_col, SEED_EPOCH, ax.keys)
+    _write_epoch(ids, parts[0][1].labels_dir, SEED_EPOCH, ["epoch"])
+    return labels
 
 
 def seed_index(
@@ -171,36 +269,29 @@ def seed_index(
     index layout (epoch = SEED_EPOCH).  Returns the labels."""
     from ..plans.pipeline import run_pipeline
 
-    labels = run_pipeline(df, cfg).localCheckpoint(eager=True)
-    rows = signed(df, cfg).join(
-        labels.select(cfg.id_col, "cluster_id"), cfg.id_col
-    ).select(cfg.id_col, "shingles_h", "sketch", "band_keys", "cluster_id")
-    write_index_epoch(rows, index, cfg.id_col, SEED_EPOCH)
-    _write_epoch(
-        labels.select(cfg.id_col, "cluster_id"), index.labels_dir, SEED_EPOCH, ["epoch"]
-    )
-    return labels
+    return _seed(df, run_pipeline(df, cfg), cfg.id_col, [(text_axis(cfg), index)])
 
 
-def _best_index_match(
-    s_new: DataFrame, index: StreamIndex, cfg: DedupConfig
+def _best_match(
+    sigs: DataFrame, index: StreamIndex, ax: Axis, id_col: str
 ) -> DataFrame:
-    """(id, idx_cluster) — each new item's best-matching indexed cluster at
-    jaccard >= threshold; at most one row per new id (max jaccard, ties to
-    the smallest cluster label for determinism).
+    """(id, idx_cluster) — each new item's best-matching indexed cluster
+    among those the axis verifies; at most one row per new id (highest
+    score, ties to the smallest cluster label for determinism).
 
-    Shuffle discipline (VERDICT r3 items 1-2): the band-key join moves ids
-    only; shingle arrays are fetched AFTER the distinct candidate set, once
-    per (new, indexed) pair — the verify_pairs pattern (pairs.py:120).  The
-    key index is read pruned to the pfx partitions the batch's own band
-    keys hash into (collecting the <= N_KEY_PARTITIONS distinct prefixes is
-    one tiny driver action on an already-materialized frame; production =
-    Iceberg bucket pruning / storage-partitioned join, no driver hop)."""
-    iid = cfg.id_col
-    spark = s_new.sparkSession
-    new_keys = s_new.select(
-        F.col(iid).alias("_nid"), F.explode("band_keys").alias("band_key")
-    ).withColumn("pfx", _pfx("band_key"))
+    Shuffle discipline (VERDICT r3 items 1-2): the key join moves ids
+    only; the verify columns are fetched AFTER the distinct candidate set,
+    once per (new, indexed) pair — the verify_pairs pattern (pairs.py).
+    The key index is read pruned to the pfx partitions the batch's own
+    keys hash into (collecting the <= N_KEY_PARTITIONS distinct prefixes
+    is one tiny driver action on an already-materialized frame;
+    production = Iceberg bucket pruning / storage-partitioned join, no
+    driver hop)."""
+    spark = sigs.sparkSession
+    arr, key = ax.keys
+    new_keys = sigs.select(
+        F.col(id_col).alias("_nid"), F.explode(arr).alias(key)
+    ).withColumn("pfx", _pfx(key))
 
     pfxs = [r["pfx"] for r in new_keys.select("pfx").distinct().collect()]
     idx_keys = (
@@ -208,100 +299,44 @@ def _best_index_match(
         .where(F.col("pfx").isin(pfxs))
         .select(
             "pfx",
-            "band_key",
-            F.col(iid).alias("_iid"),
+            key,
+            F.col(id_col).alias("_iid"),
             F.col("cluster_id").alias("_icluster"),
         )
     )
     # ids only through the shuffle; (_iid -> _icluster) is functional, so
-    # distinct on the pair triple dedups band-key multiplicity
+    # distinct on the pair triple dedups key multiplicity
     cand = (
-        new_keys.join(idx_keys, ["pfx", "band_key"])
+        new_keys.join(idx_keys, ["pfx", key])
         .select("_nid", "_iid", "_icluster")
         .distinct()
     )
-
-    new_arr = s_new.select(
-        F.col(iid).alias("_nid"), F.array_distinct("shingles_h").alias("_nsh")
-    )
+    new_arr = sigs.select(F.col(id_col).alias("_nid"), F.struct(*ax.fetch).alias("_n"))
     idx_arr = index.read_sigs(spark).select(
-        F.col(iid).alias("_iid"), F.array_distinct("shingles_h").alias("_ish")
+        F.col(id_col).alias("_iid"), F.struct(*ax.fetch).alias("_i")
     )
-    j = cand.join(new_arr, "_nid").join(idx_arr, "_iid")
-    inter = F.size(F.array_intersect("_nsh", "_ish"))
-    union = F.size("_nsh") + F.size("_ish") - inter
-    jac = inter.cast("double") / F.greatest(union, F.lit(1)).cast("double")
+    score, ok = ax.score(F.col("_n"), F.col("_i"))
     scored = (
-        j.select("_nid", "_icluster", jac.alias("_jac"))
-        .where(F.col("_jac") >= F.lit(cfg.resolved_jaccard_threshold))
+        cand.join(new_arr, "_nid")
+        .join(idx_arr, "_iid")
+        .where(ok)
         # a cluster is reachable through many members — keep its best
         .groupBy("_nid", "_icluster")
-        .agg(F.max("_jac").alias("_jac"))
+        .agg(F.max(score).alias("_s"))
     )
-    w = Window.partitionBy("_nid").orderBy(F.desc("_jac"), F.asc("_icluster"))
+    w = Window.partitionBy("_nid").orderBy(F.desc("_s"), F.asc("_icluster"))
     return (
         scored.withColumn("_rk", F.row_number().over(w))
         .where(F.col("_rk") == 1)
-        .select(F.col("_nid").alias(iid), F.col("_icluster").alias("idx_cluster"))
+        .select(F.col("_nid").alias(id_col), F.col("_icluster").alias("idx_cluster"))
     )
-
-
-def attach_batch(
-    batch: DataFrame, cfg: DedupConfig, index: StreamIndex
-) -> tuple[DataFrame, DataFrame]:
-    """One micro-batch of incremental dedup: returns (labels, new_index_rows)
-    where labels is (id, cluster_id) for every batch row and new_index_rows
-    is the batch's signature rows (with final labels) to append to the
-    index.  Pure batch-DataFrame logic so it is unit-testable outside a
-    stream and reusable from foreachBatch."""
-    caller = batch.sparkSession
-    iid = cfg.id_col
-    # localCheckpoint (not persist): the signed frame is read by the verify
-    # joins, the index match, and the index append; eager materialization
-    # computes it once and the blocks are released by the context cleaner
-    # when the batch's frames go out of scope — no per-batch unpersist
-    # bookkeeping to leak across a long-running stream
-    s_new = signed(batch, cfg).localCheckpoint(eager=True)
-    # a micro-batch is dust relative to the stream session's deployment-
-    # sized shuffle conf — right-size the per-batch work (micro.py; the
-    # checkpointed frame carries its upstream size estimate, and an
-    # estimate-free source falls back to the session untouched).  The
-    # returned frames are handed back to the caller's session below, so
-    # the sinks and the foreachBatch contract see nothing micro.
-    s_new, micro = micro_rebound(s_new)
-    spark = s_new.sparkSession
-
-    # in-batch clustering (novel duplicate groups arriving together);
-    # ids from the signed frame — signed() emits one row per input row
-    # (the rebuild path already relies on this invariant)
-    edges = verify_pairs(candidate_pairs(s_new, cfg), s_new, cfg).select("src", "dst")
-    local = assign_clusters(s_new.select(iid), edges, iid).select(
-        iid, F.col("cluster_id").alias("local_cluster")
-    )
-
-    if index.exists(spark):
-        best = _best_index_match(s_new, index, cfg)
-        labels = _adopt_labels(local, best, iid)
-    else:
-        labels = local.select(iid, F.col("local_cluster").alias("cluster_id"))
-
-    # labels feed both the label sink and the index append — pin once
-    labels = labels.localCheckpoint(eager=True)
-    new_rows = s_new.join(labels, iid).select(
-        iid, "shingles_h", "sketch", "band_keys", "cluster_id"
-    )
-    if micro:
-        labels = _rebind(labels, caller)
-        new_rows = _rebind(new_rows, caller)
-    return labels, new_rows
 
 
 def _adopt_labels(local: DataFrame, best: DataFrame, id_col: str) -> DataFrame:
     """(id, cluster_id) — adopt per LOCAL cluster: any member match attaches
     the whole local cluster; when members match different index clusters the
     smallest label wins (deterministic; the clusters are NOT merged — greedy
-    semantics per the module docstring).  Shared by the text, audio, and
-    fused attach paths so the tie-break can never diverge between axes."""
+    semantics per the module docstring)."""
     adopt = (
         local.join(best, id_col)
         .groupBy("local_cluster")
@@ -313,25 +348,98 @@ def _adopt_labels(local: DataFrame, best: DataFrame, id_col: str) -> DataFrame:
     )
 
 
+def _attach(
+    batch: DataFrame, id_col: str, parts: Parts
+) -> tuple[DataFrame, list[DataFrame]]:
+    """One micro-batch over the given axes: (labels, [new index rows per
+    axis]) — labels is (id, cluster_id) for every batch row, each rows
+    frame is that axis's signatures with the final labels."""
+    caller = batch.sparkSession
+    # localCheckpoint (not persist): a signed frame is read by the verify
+    # joins, the index match, and the index append; eager materialization
+    # computes it once and the blocks are released by the context cleaner
+    # when the batch's frames go out of scope — no per-batch unpersist
+    # bookkeeping to leak across a long-running stream
+    first = parts[0][0].sign(batch).localCheckpoint(eager=True)
+    # a micro-batch is dust relative to the stream session's deployment-
+    # sized shuffle conf — right-size the per-batch work (micro.py; the
+    # checkpointed frame carries its upstream size estimate, and an
+    # estimate-free source falls back to the session untouched).  The
+    # batch and every axis's signatures share that session; the returned
+    # frames are handed back to the caller's session below, so the sinks
+    # and the foreachBatch contract see nothing micro.
+    first, micro = micro_rebound(first)
+    spark = first.sparkSession
+    if micro:
+        batch = _rebind(batch, spark)
+    sigs = [first] + [ax.sign(batch).localCheckpoint(eager=True) for ax, _ in parts[1:]]
+
+    # in-batch clustering over every row of the batch (an audio clip that
+    # does not decode has no signature row but still gets a label)
+    edges = _union([ax.batch_edges(s, batch) for (ax, _), s in zip(parts, sigs)])
+    local = assign_clusters(batch.select(id_col), edges, id_col).select(
+        id_col, F.col("cluster_id").alias("local_cluster")
+    )
+    matches = [
+        _best_match(s, ix, ax, id_col)
+        for (ax, ix), s in zip(parts, sigs)
+        if ix.exists()
+    ]
+    if matches:
+        labels = _adopt_labels(local, reduce(DataFrame.unionByName, matches), id_col)
+    else:
+        labels = local.select(id_col, F.col("local_cluster").alias("cluster_id"))
+
+    # labels feed both the label sink and the index append — pin once
+    labels = labels.localCheckpoint(eager=True)
+    rows = [
+        s.join(labels, id_col).select(id_col, *ax.sig_cols, "cluster_id")
+        for (ax, _), s in zip(parts, sigs)
+    ]
+    if micro:
+        labels = _rebind(labels, caller)
+        rows = [_rebind(r, caller) for r in rows]
+    return labels, rows
+
+
+def attach_batch(
+    batch: DataFrame, cfg: DedupConfig, index: StreamIndex
+) -> tuple[DataFrame, DataFrame]:
+    """One micro-batch of incremental dedup: returns (labels, new_index_rows)
+    where labels is (id, cluster_id) for every batch row and new_index_rows
+    is the batch's signature rows (with final labels) to append to the
+    index.  Pure batch-DataFrame logic so it is unit-testable outside a
+    stream and reusable from foreachBatch."""
+    labels, (rows,) = _attach(batch, cfg.id_col, [(text_axis(cfg), index)])
+    return labels, rows
+
+
+def _attach_epoch(batch: DataFrame, epoch_id: int, id_col: str, parts: Parts) -> None:
+    """The foreachBatch body: attach, then the labels sink and each axis's
+    index sinks for this epoch."""
+    labels, rows = _attach(batch, id_col, parts)
+    _write_epoch(labels, parts[0][1].labels_dir, epoch_id, ["epoch"])
+    for (ax, ix), r in zip(parts, rows):
+        _write_sig_epoch(r, ix, id_col, epoch_id, ax.keys)
+
+
 def _lock_path(index: StreamIndex) -> str:
-    """Active-stream marker: a lease file next to sig_dir.  Held for the
-    lifetime of run_attach_stream; rebuild_index refuses to run while it
-    exists, turning the 'rebuild must run while the stream is stopped'
-    contract from a docstring into a loud error (VERDICT r4 item 5).
-    A crashed stream leaves the lease behind — the file records the holder
-    pid so an operator can confirm it is stale and remove it (production:
-    an Iceberg table property / a ZK lease with TTL)."""
+    """Active-stream lease file next to sig_dir.  A crashed holder leaves
+    the lease behind — the file records the holder's pid so an operator can
+    confirm it is stale and remove it (production: an Iceberg table
+    property / a ZK lease with TTL)."""
     return index.sig_dir + ".stream_lock"
 
 
-def _acquire_leases(indexes) -> list[str]:
-    """Create the active-stream lease file for each index (exclusive —
-    O_EXCL); returns the lock paths.  An already-held lease raises instead
-    of being overwritten: silently stealing it would let this stream's
-    exit delete the OTHER stream's rebuild fence (the corruption class the
-    lease exists to prevent).  Callers must release in a finally that also
-    covers a failed .start() — a leaked lease blocks every later rebuild
-    with a live-pid holder that the recovery procedure would misread."""
+def _acquire_leases(indexes, holder: str = "attach stream") -> list[str]:
+    """Create the lease file for each index (exclusive — O_EXCL); returns
+    the lock paths.  An already-held lease raises instead of being
+    overwritten: silently stealing it would let this holder's exit delete
+    the OTHER holder's fence (the corruption class the lease exists to
+    prevent).  Partial acquisitions roll back.  Callers release in a
+    finally that also covers a failed .start() — a leaked lease blocks
+    every later rebuild with a live-pid holder that the recovery
+    procedure would misread."""
     locks: list[str] = []
     try:
         for ix in indexes:
@@ -339,14 +447,14 @@ def _acquire_leases(indexes) -> list[str]:
             os.makedirs(os.path.dirname(lock) or ".", exist_ok=True)
             try:
                 with open(lock, "x") as fh:
-                    fh.write(str(os.getpid()))
+                    fh.write(f"{os.getpid()} {holder}")
             except FileExistsError:
                 with open(lock) as fh:
-                    holder = fh.read().strip()
+                    held = fh.read().strip()
                 raise RuntimeError(
-                    f"attach stream: active-stream lease {lock} already "
-                    f"held (pid {holder}); stop that stream first (remove "
-                    "the file only if the holder is dead)"
+                    f"{holder}: active-stream lease {lock} already held "
+                    f"(pid {held}); stop that stream or rebuild first "
+                    "(remove the file only if the holder is confirmed dead)"
                 ) from None
             locks.append(lock)
     except BaseException:
@@ -363,40 +471,75 @@ def _release_leases(locks: list[str]) -> None:
             pass
 
 
+class _StreamHandle:
+    """A started attach query and the leases it holds."""
+
+    def __init__(self, query, locks: list[str]):
+        self.query = query
+        self._locks = locks
+
+    def stop(self) -> None:
+        """Stop the query if it is still running (raising a failure that
+        raced with the stop), then release the leases."""
+        try:
+            if self.query.isActive:
+                self.query.stop()
+                self.query.awaitTermination()
+        finally:
+            _release_leases(self._locks)
+
+
+def _start_stream(
+    spark: SparkSession,
+    source_dir: str,
+    schema: str,
+    checkpoint_dir: str,
+    id_col: str,
+    parts: Parts,
+    trigger: dict,
+) -> _StreamHandle:
+    """Start the foreachBatch attach query over a parquet file stream,
+    holding every sub-index's lease from before .start() — INCLUDING the
+    window where .start() itself raises (bad source path, checkpoint
+    schema conflict), which must release them."""
+    indexes = [ix for _, ix in parts]
+    per_batch = partial(_attach_epoch, id_col=id_col, parts=parts)
+    locks = _acquire_leases(indexes)
+    try:
+        _verify_index_health(indexes)
+        q = (
+            spark.readStream.schema(schema)
+            .parquet(source_dir)
+            .writeStream.foreachBatch(per_batch)
+            .option("checkpointLocation", checkpoint_dir)
+            .trigger(**trigger)
+            .start()
+        )
+    except BaseException:
+        _release_leases(locks)
+        raise
+    return _StreamHandle(q, locks)
+
+
 def _run_stream(
     spark: SparkSession,
     source_dir: str,
     schema: str,
-    per_batch,
     checkpoint_dir: str,
-    lease_indexes,
+    id_col: str,
+    parts: Parts,
     available_now: bool,
 ) -> None:
-    """Shared foreachBatch scaffold for the blocking attach streams (text /
-    audio / fused): hold the stream lease(s) from before .start() until the
-    query terminates — INCLUDING the window where .start() itself raises
-    (bad source path, checkpoint schema conflict), which previously leaked
-    the lease and bricked every subsequent rebuild."""
-    locks = _acquire_leases(lease_indexes)
+    """Run the attach stream and block until the trigger drains (or, for
+    the processingTime trigger, until the query stops)."""
+    trigger = (
+        {"availableNow": True} if available_now else {"processingTime": "1 seconds"}
+    )
+    h = _start_stream(spark, source_dir, schema, checkpoint_dir, id_col, parts, trigger)
     try:
-        _verify_index_health(lease_indexes)
-        reader = spark.readStream.schema(schema).parquet(source_dir)
-        writer = reader.writeStream.foreachBatch(per_batch).option(
-            "checkpointLocation", checkpoint_dir
-        )
-        trigger = (
-            {"availableNow": True}
-            if available_now
-            else {"processingTime": "1 seconds"}
-        )
-        q = writer.trigger(**trigger).start()
-        try:
-            q.awaitTermination()
-        finally:
-            if q.isActive:
-                q.stop()
+        h.query.awaitTermination()
     finally:
-        _release_leases(locks)
+        h.stop()
 
 
 def run_attach_stream(
@@ -414,15 +557,9 @@ def run_attach_stream(
     overwrites its own partitions (idempotent — see _write_epoch).
     availableNow=True is the backfill/batch-drain mode; pass False for a
     continuously-running micro-batch job."""
-
-    def _per_batch(batch: DataFrame, epoch_id: int) -> None:
-        labels, new_rows = attach_batch(batch, cfg, index)
-        _write_epoch(labels, index.labels_dir, epoch_id, ["epoch"])
-        write_index_epoch(new_rows, index, cfg.id_col, epoch_id)
-
     _run_stream(
-        spark, source_dir, schema, _per_batch, checkpoint_dir, [index],
-        available_now,
+        spark, source_dir, schema, checkpoint_dir, cfg.id_col,
+        [(text_axis(cfg), index)], available_now,
     )
 
 
@@ -437,87 +574,23 @@ def start_attach_stream(
 ):
     """Non-blocking variant of run_attach_stream for the continuous
     (processingTime) trigger: starts the query and returns a handle with
-    .stop().  The caller owns the lifecycle; the stream lease is released
-    on .stop().  Used by the long-running-trigger smoke test (VERDICT r4
-    item 6) and mirrors how a production driver would hold the query."""
-
-    def _per_batch(batch: DataFrame, epoch_id: int) -> None:
-        labels, new_rows = attach_batch(batch, cfg, index)
-        _write_epoch(labels, index.labels_dir, epoch_id, ["epoch"])
-        write_index_epoch(new_rows, index, cfg.id_col, epoch_id)
-
-    locks = _acquire_leases([index])
-    try:
-        _verify_index_health([index])
-        q = (
-            spark.readStream.schema(schema)
-            .parquet(source_dir)
-            .writeStream.foreachBatch(_per_batch)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(processingTime=processing_time)
-            .start()
-        )
-    except BaseException:
-        _release_leases(locks)
-        raise
-
-    class _Handle:
-        query = q
-
-        @staticmethod
-        def stop() -> None:
-            try:
-                if q.isActive:
-                    q.stop()
-                q.awaitTermination()
-            finally:
-                _release_leases(locks)
-
-    return _Handle
-
-
-def _acquire_rebuild_leases(indexes) -> list[str]:
-    """Hold the stream lease(s) for the FULL duration of a rebuild
-    (ADVICE r5): the previous entry-time existence check was one-way —
-    an attach stream starting mid-rebuild would acquire the lease
-    successfully, append epochs, and have them silently discarded when
-    the rebuild swapped in tables built from its pre-stream snapshot;
-    two concurrent rebuilds were likewise unfenced.  Taking the same
-    O_EXCL lease file turns the TOCTOU check into mutual exclusion:
-    attach-vs-rebuild and rebuild-vs-rebuild now both fail fast, in
-    either order.  Raises with the held holder's pid, exactly like the
-    old check; callers release in a finally."""
-    locks: list[str] = []
-    try:
-        for ix in indexes:
-            lock = _lock_path(ix)
-            os.makedirs(os.path.dirname(lock) or ".", exist_ok=True)
-            try:
-                with open(lock, "x") as fh:
-                    fh.write(f"{os.getpid()} rebuild")
-            except FileExistsError:
-                with open(lock) as fh:
-                    holder = fh.read().strip()
-                raise RuntimeError(
-                    f"rebuild: active-stream lease {lock} held (pid "
-                    f"{holder}); stop the attach stream first (remove the "
-                    "file only if the holder is confirmed dead)"
-                ) from None
-            locks.append(lock)
-    except BaseException:
-        _release_leases(locks)
-        raise
-    return locks
+    .query and .stop().  The caller owns the lifecycle; the stream lease
+    is released on .stop().  Used by the long-running-trigger smoke test
+    (VERDICT r4 item 6) and mirrors how a production driver would hold the
+    query."""
+    return _start_stream(
+        spark, source_dir, schema, checkpoint_dir, cfg.id_col,
+        [(text_axis(cfg), index)], {"processingTime": processing_time},
+    )
 
 
 def _verify_index_health(indexes) -> None:
-    """Complete any interrupted rebuild swap, then fail loudly on a
-    half-present index (ADVICE r5): a crash mid-swap could previously
-    leave e.g. fresh sig/labels next to pre-rebuild keys, and an attach
-    stream (which never ran _recover_swap) would silently adopt cluster
-    labels that no longer exist in the labels table.  The labels table is
-    deliberately NOT part of the presence check: it is legitimately
-    absent on a fresh index and shared across fused sub-indexes."""
+    """Complete or discard any interrupted rebuild swap, then fail loudly
+    on a half-present index (ADVICE r5): an attach stream must never adopt
+    cluster labels that no longer exist in the labels table.  The labels
+    table is deliberately NOT part of the presence check: it is
+    legitimately absent on a fresh index and shared across fused
+    sub-indexes."""
     for ix in indexes:
         _recover_swap(ix)
         present = {
@@ -530,6 +603,68 @@ def _verify_index_health(indexes) -> None:
             )
 
 
+def _rebuild(spark: SparkSession, id_col: str, parts: Parts) -> None:
+    """Re-cluster the accumulated signatures of every axis over the union
+    of their stored-signature edges and swap the corrected labels into all
+    tables, holding every sub-index's lease throughout."""
+    indexes = [ix for _, ix in parts]
+    locks = _acquire_leases(indexes, "rebuild")
+    try:
+        for ix in indexes:
+            _recover_swap(ix)
+        # right-size to the accumulated index's estimated size (micro.py;
+        # the first axis's table is the widest); the rebuild only writes,
+        # so nothing is rebound back
+        (ax0, ix0), rest = parts[0], parts[1:]
+        first, _ = micro_rebound(ix0.read_sigs(spark).select(id_col, *ax0.sig_cols))
+        spark = first.sparkSession
+        sigs = [first.localCheckpoint(eager=True)] + [
+            ix.read_sigs(spark).select(id_col, *ax.sig_cols).localCheckpoint(eager=True)
+            for ax, ix in rest
+        ]
+        edges = _union([ax.sig_edges(s) for (ax, _), s in zip(parts, sigs)])
+        # the CC vertex set is the UNION of the sig tables' ids: an id
+        # signed on only one axis (undecodable audio keeps it out of the
+        # audio table) must still be a vertex, or its edges on the other
+        # axis would be discarded and a bridging merge lost
+        vertices = _union([s.select(id_col) for s in sigs])
+        relabeled = assign_clusters(vertices, edges, id_col).select(
+            id_col, "cluster_id"
+        )
+        # label-table invariant: a labeled id with no signature row (a
+        # clip whose bytes never decoded, a lost sig epoch) keeps its old
+        # label verbatim instead of silently vanishing from the swapped-in
+        # table.  (An index may have sig/key epochs but no labels table
+        # yet — nothing to carry then.)
+        labels_dir = ix0.labels_dir
+        if os.path.exists(labels_dir):
+            unsigned = ix0.read_labels(spark).join(
+                vertices, id_col, "left_anti"
+            ).select(id_col, "cluster_id")
+            relabeled = relabeled.unionByName(unsigned)
+        labels = relabeled.localCheckpoint(eager=True)
+
+        pairs = []
+        for (ax, ix), s in zip(parts, sigs):
+            rows = s.join(labels, id_col).select(id_col, *ax.sig_cols, "cluster_id")
+            rows = rows.localCheckpoint(eager=True)
+            staged = StreamIndex(
+                *(d + ".rebuild" for d in (ix.sig_dir, labels_dir, ix.keys_dir))
+            )
+            _write_sig_epoch(rows, staged, id_col, SEED_EPOCH, ax.keys)
+            pairs += [(staged.sig_dir, ix.sig_dir), (staged.keys_dir, ix.keys_dir)]
+        _write_epoch(labels, staged.labels_dir, SEED_EPOCH, ["epoch"])
+        pairs.append((staged.labels_dir, labels_dir))
+        # staging is complete: publish the pair list atomically, then swap
+        marker = _swap_marker(labels_dir)
+        with open(marker + ".tmp", "w") as fh:
+            json.dump(pairs, fh)
+        os.rename(marker + ".tmp", marker)
+        _finish_swap(marker)
+    finally:
+        _release_leases(locks)
+
+
 def rebuild_index(spark: SparkSession, cfg: DedupConfig, index: StreamIndex) -> None:
     """Offline compaction: re-cluster the ENTIRE accumulated signature index
     with the batch candidate/verify/CC machinery and swap corrected labels
@@ -539,100 +674,45 @@ def rebuild_index(spark: SparkSession, cfg: DedupConfig, index: StreamIndex) -> 
 
     Runs on the signatures alone (shingles_h/sketch/band_keys are the whole
     pipeline input after signing), so the raw corpus is not re-read.  The
-    swap per table is: live -> live.old, tmp -> live, delete live.old —
-    the live directory is absent only between two renames (no rmtree in
-    the window, ADVICE r4), and _recover_swap at entry completes any
-    interrupted swap from the surviving .rebuild/.old directory, so
-    re-running rebuild after ANY crash point converges.  Production: one
-    atomic Iceberg REPLACE commit across the three tables.
-    Must run while the stream is stopped — enforced: the rebuild HOLDS
-    the active-stream lease for its whole duration (raises RuntimeError
-    if it is already held), so an attach stream cannot start mid-rebuild
-    and a second rebuild cannot interleave."""
-    locks = _acquire_rebuild_leases([index])
-    try:
-        _recover_swap(index)
-        iid = cfg.id_col
-        # right-size the rebuild to the accumulated index's estimated size
-        # (micro.py) — a deployment-scale index keeps the session conf; the
-        # rebuild only writes, so nothing is rebound back
-        sigs_src, _ = micro_rebound(
-            index.read_sigs(spark).select(iid, "shingles_h", "sketch", "band_keys")
-        )
-        spark = sigs_src.sparkSession
-        sigs = sigs_src.localCheckpoint(eager=True)
-        edges = verify_pairs(candidate_pairs(sigs, cfg), sigs, cfg).select(
-            "src", "dst"
-        )
-        relabeled = assign_clusters(sigs.select(iid), edges, iid).select(
-            iid, "cluster_id"
-        )
-        # label-table invariant (same guard as the audio/fused rebuilds):
-        # any labeled id absent from the signature table keeps its old
-        # label verbatim instead of silently vanishing from the swapped-in
-        # table — signed() emits a row per input row today, but the
-        # invariant to uphold is the label table's, not the signer's.  (An
-        # index may have sig/key epochs but no labels table yet — nothing
-        # to carry then.)
-        if os.path.exists(index.labels_dir):
-            unsigned = index.read_labels(spark).join(
-                sigs.select(iid), iid, "left_anti"
-            ).select(iid, "cluster_id")
-            relabeled = relabeled.unionByName(unsigned)
-        labels = relabeled.localCheckpoint(eager=True)
-        rows = sigs.join(labels, iid).select(
-            iid, "shingles_h", "sketch", "band_keys", "cluster_id"
-        ).localCheckpoint(eager=True)
-
-        tmp = _rebuild_tmp(index)
-        write_index_epoch(rows, tmp, iid, SEED_EPOCH)
-        _write_epoch(labels, tmp.labels_dir, SEED_EPOCH, ["epoch"])
-        _swap_index(index, tmp)
-    finally:
-        _release_leases(locks)
+    swap is crash-safe (module docstring): re-running rebuild after ANY
+    crash point converges.  Must run while the stream is stopped —
+    enforced: the rebuild HOLDS the active-stream lease for its whole
+    duration (raises RuntimeError if it is already held), so an attach
+    stream cannot start mid-rebuild and a second rebuild cannot
+    interleave."""
+    _rebuild(spark, cfg.id_col, [(text_axis(cfg), index)])
 
 
-def _rebuild_tmp(index: StreamIndex) -> StreamIndex:
-    """The .rebuild staging triple for an index, wiped clean."""
-    tmp = StreamIndex(
-        index.sig_dir + ".rebuild",
-        index.labels_dir + ".rebuild",
-        index.keys_dir + ".rebuild",
-    )
-    for d in (tmp.sig_dir, tmp.labels_dir, tmp.keys_dir):
-        shutil.rmtree(d, ignore_errors=True)
-    return tmp
+def _swap_marker(labels_dir: str) -> str:
+    """The staging-complete marker of a rebuild swap, beside the labels
+    dir every sub-index of one label space shares."""
+    return labels_dir + ".swap"
 
 
-def _swap_index(index: StreamIndex, tmp: StreamIndex) -> None:
-    """Crash-safe three-table swap: live -> live.old, tmp -> live, delete
-    .old — the live directory is absent only between two renames, and
-    _recover_swap completes any interrupted swap (ADVICE r4).  Shared by
-    the text and audio rebuilds."""
-    for live, new in (
-        (index.sig_dir, tmp.sig_dir),
-        (index.labels_dir, tmp.labels_dir),
-        (index.keys_dir, tmp.keys_dir),
-    ):
+def _finish_swap(marker: str) -> None:
+    """Swap every staged -> live pair the marker lists that is not swapped
+    yet (live -> .old, staged -> live, delete .old), then drop the marker.
+    Idempotent: re-running after a crash anywhere in here converges."""
+    with open(marker) as fh:
+        pairs = json.load(fh)
+    for staged, live in pairs:
         old = live + ".old"
+        if os.path.exists(staged):
+            shutil.rmtree(old, ignore_errors=True)
+            if os.path.exists(live):
+                os.rename(live, old)
+            os.rename(staged, live)
         shutil.rmtree(old, ignore_errors=True)
-        if os.path.exists(live):
-            os.rename(live, old)
-        os.rename(new, live)
-        shutil.rmtree(old, ignore_errors=True)
+    os.remove(marker)
 
 
 def _recover_swap(index: StreamIndex) -> None:
-    """Complete an interrupted rebuild swap: for any table whose live
-    directory is absent, restore it from the completed .rebuild output
-    (preferred — the swap loop only starts after all three tmp writes
-    finish, so an existing .rebuild alongside a missing live dir is
-    complete) or, failing that, from the pre-swap .old copy.  Idempotent;
-    no-op on a healthy index."""
+    """Complete or discard an interrupted rebuild swap: with the marker
+    present, staging finished — swap every remaining pair; without it,
+    staging never finished — discard the staged dirs.  Idempotent; no-op
+    on a healthy index."""
+    marker = _swap_marker(index.labels_dir)
+    if os.path.exists(marker):
+        _finish_swap(marker)
     for live in (index.sig_dir, index.labels_dir, index.keys_dir):
-        if os.path.exists(live):
-            continue
-        for cand in (live + ".rebuild", live + ".old"):
-            if os.path.exists(cand):
-                os.rename(cand, live)
-                break
+        shutil.rmtree(live + ".rebuild", ignore_errors=True)

@@ -5,6 +5,7 @@ layout (pruned key reads, id-only band shuffle), and the rebuild_index
 compaction hook (the north rule's "resumable" requirement applied to the
 steady-state ingest path)."""
 
+import json
 import os
 import shutil
 
@@ -20,7 +21,7 @@ from lsh_hdc_spark.streaming import (
     seed_index,
     write_index_epoch,
 )
-from lsh_hdc_spark.streaming.ingest import _best_index_match
+from lsh_hdc_spark.streaming.ingest import _best_match, text_axis
 
 CFG = DedupConfig()
 
@@ -98,7 +99,7 @@ def test_index_match_plan_shape(spark, index):
         SCHEMA,
     )
     s_new = signed(batch, CFG).localCheckpoint(eager=True)
-    best = _best_index_match(s_new, index, CFG)
+    best = _best_match(s_new, index, text_axis(CFG), CFG.id_col)
     plan = spark._jvm.PythonSQLUtils.explainString(
         best._jdf.queryExecution(), "formatted"
     )
@@ -145,13 +146,16 @@ def test_epoch_write_idempotent(spark, index):
     )
 
 
-def test_rebuild_merges_bridged_clusters(spark, index):
-    """Greedy attach never merges two EXISTING clusters; a bridging arrival
-    therefore leaves them split.  rebuild_index re-runs the batch
-    clustering over the accumulated signatures and corrects the drift."""
-    # 12 bands x 1 row: candidate probability ~1 at the lowered threshold
-    # (the parity 4x3 S-curve would correctly suppress a 0.43-Jaccard pair)
-    cfg = CFG.with_(bandwidth=1, jaccard_threshold=0.30)
+#: 12 bands x 1 row: candidate probability ~1 at the lowered threshold
+#: (the parity 4x3 S-curve would correctly suppress a 0.43-Jaccard pair)
+BRIDGE_CFG = CFG.with_(bandwidth=1, jaccard_threshold=0.30)
+
+
+def _bridged(spark, index):
+    """Seed two distinct clusters, then attach one arrival bridging both:
+    greedy attach leaves them split in the index (the drift a rebuild
+    corrects)."""
+    cfg = BRIDGE_CFG
     half_a = "alpha beta gamma delta epsilon zeta eta theta"
     half_b = "one two three four five six seven eight"
     base = spark.createDataFrame([(1, half_a), (2, half_b)], SCHEMA)
@@ -174,7 +178,13 @@ def test_rebuild_merges_bridged_clusters(spark, index):
     }
     assert idx[1] == 1 and idx[2] == 2 and idx[10] == 1
 
-    rebuild_index(spark, cfg, index)
+
+def test_rebuild_merges_bridged_clusters(spark, index):
+    """Greedy attach never merges two EXISTING clusters; a bridging arrival
+    therefore leaves them split.  rebuild_index re-runs the batch
+    clustering over the accumulated signatures and corrects the drift."""
+    _bridged(spark, index)
+    rebuild_index(spark, BRIDGE_CFG, index)
     fixed = {
         r.doc_id: r.cluster_id for r in spark.read.parquet(index.sig_dir).collect()
     }
@@ -184,6 +194,53 @@ def test_rebuild_merges_bridged_clusters(spark, index):
         for r in spark.read.parquet(index.labels_dir).collect()
     }
     assert relabeled == fixed
+
+
+def _table_labels(spark, path):
+    rows = spark.read.parquet(path).select("doc_id", "cluster_id").collect()
+    return sorted({(r.doc_id, r.cluster_id) for r in rows})
+
+
+def test_rebuild_crash_between_tables_recovers(
+    spark, index, monkeypatch, crash_between_swaps
+):
+    """A rebuild that dies after its first table went live must not leave
+    new signatures beside old labels/keys: stream-start recovery finishes
+    every staged table, so all three agree on the rebuilt labels."""
+    from lsh_hdc_spark.streaming.ingest import _swap_marker, _verify_index_health
+
+    _bridged(spark, index)
+    crash_between_swaps()
+    with pytest.raises(OSError, match="simulated crash"):
+        rebuild_index(spark, BRIDGE_CFG, index)
+    monkeypatch.undo()
+
+    _verify_index_health([index])
+    merged = [(1, 1), (2, 1), (10, 1)]
+    for d in (index.sig_dir, index.labels_dir, index.keys_dir):
+        assert _table_labels(spark, d) == merged, d
+        assert not os.path.exists(d + ".rebuild") and not os.path.exists(d + ".old")
+    assert not os.path.exists(_swap_marker(index.labels_dir))
+
+
+def test_attach_sees_index_deleted_and_recreated(spark, index):
+    """Index presence is read per call: after the index is deleted at its
+    path an attach runs as on an empty index, and after it is seeded again
+    the next attach adopts from it."""
+    batch = spark.createDataFrame(
+        [(10, "the quick brown fox jumps over the lazy dog near the river bank")],
+        SCHEMA,
+    )
+    _seed(spark, index)
+    labels, _ = attach_batch(batch, CFG, index)
+    assert labels.collect()[0].cluster_id == 1
+    for d in (index.sig_dir, index.labels_dir, index.keys_dir):
+        shutil.rmtree(d)
+    labels, _ = attach_batch(batch, CFG, index)
+    assert labels.collect()[0].cluster_id == 10  # nothing to adopt from
+    _seed(spark, index)
+    labels, _ = attach_batch(batch, CFG, index)
+    assert labels.collect()[0].cluster_id == 1
 
 
 def test_stream_resume_skips_committed_files(spark, index, tmpdirs):
@@ -427,7 +484,6 @@ def test_rebuild_lease_blocks_attach_and_second_rebuild(tmp_path):
     from lsh_hdc_spark.streaming.ingest import (
         StreamIndex,
         _acquire_leases,
-        _acquire_rebuild_leases,
         _lock_path,
         _release_leases,
     )
@@ -436,17 +492,17 @@ def test_rebuild_lease_blocks_attach_and_second_rebuild(tmp_path):
         str(tmp_path / "sig"), str(tmp_path / "labels"), str(tmp_path / "keys")
     )
     # rebuild holds -> attach refused
-    locks = _acquire_rebuild_leases([ix])
+    locks = _acquire_leases([ix], "rebuild")
     with pytest.raises(RuntimeError, match="already held"):
         _acquire_leases([ix])
     # rebuild holds -> second rebuild refused
     with pytest.raises(RuntimeError, match="active-stream lease"):
-        _acquire_rebuild_leases([ix])
+        _acquire_leases([ix], "rebuild")
     _release_leases(locks)
     # attach holds -> rebuild refused (the original direction)
     locks = _acquire_leases([ix])
     with pytest.raises(RuntimeError, match="active-stream lease"):
-        _acquire_rebuild_leases([ix])
+        _acquire_leases([ix], "rebuild")
     _release_leases(locks)
     assert not os.path.exists(_lock_path(ix))
 
@@ -457,7 +513,11 @@ def test_attach_refuses_partially_present_index(tmp_path):
     that no longer exist; a fully-absent or fully-present index passes."""
     import os
 
-    from lsh_hdc_spark.streaming.ingest import StreamIndex, _verify_index_health
+    from lsh_hdc_spark.streaming.ingest import (
+        StreamIndex,
+        _swap_marker,
+        _verify_index_health,
+    )
 
     ix = StreamIndex(
         str(tmp_path / "sig"), str(tmp_path / "labels"), str(tmp_path / "keys")
@@ -468,7 +528,14 @@ def test_attach_refuses_partially_present_index(tmp_path):
         _verify_index_health([ix])
     os.makedirs(ix.keys_dir)
     _verify_index_health([ix])  # both present: fine
-    # an interrupted swap (live missing, .rebuild staged) is healed first
+    # an interrupted swap (live missing, .rebuild staged, staging marker
+    # written) is finished first
     os.rename(ix.keys_dir, ix.keys_dir + ".rebuild")
+    with open(_swap_marker(ix.labels_dir), "w") as fh:
+        json.dump([[ix.keys_dir + ".rebuild", ix.keys_dir]], fh)
     _verify_index_health([ix])
     assert os.path.exists(ix.keys_dir)
+    # a staged dir without the marker is unfinished staging: discarded
+    os.makedirs(ix.sig_dir + ".rebuild")
+    _verify_index_health([ix])
+    assert not os.path.exists(ix.sig_dir + ".rebuild")

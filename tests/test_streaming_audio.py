@@ -181,12 +181,13 @@ def test_audio_index_match_plan_shape(spark, index):
     is scanned exactly once, reading only (id, spec, n_samples) — the
     stored keys stay unread."""
     from lsh_hdc_spark.operators.audio_dedup import audio_signatures
-    from lsh_hdc_spark.streaming.audio_ingest import SPEC_TOL, _best_audio_match
+    from lsh_hdc_spark.streaming.audio_ingest import audio_axis
+    from lsh_hdc_spark.streaming.ingest import _best_match
 
     _attach_mod3(spark, index, n=24)
     batch = synth_clips(spark, 4, seed=7)
     sigs = audio_signatures(batch, "clip_id").localCheckpoint(eager=True)
-    best = _best_audio_match(sigs, index, "clip_id", SPEC_TOL)
+    best = _best_match(sigs, index, audio_axis("clip_id"), "clip_id")
     plan = spark._jvm.PythonSQLUtils.explainString(
         best._jdf.queryExecution(), "formatted"
     )

@@ -107,6 +107,41 @@ def test_fused_rebuild_canonicalizes(spark, index):
         assert label == f"clip{root:08d}", cid
 
 
+def test_fused_rebuild_crash_between_tables_recovers(
+    spark, index, monkeypatch, crash_between_swaps
+):
+    """A fused rebuild that dies after its first table went live must not
+    leave the other tables (the audio half, the shared labels) stale:
+    stream-start recovery finishes every staged table of both axes."""
+    from lsh_hdc_spark.streaming.ingest import _swap_marker, _verify_index_health
+
+    _attach_mod3(spark, index, n=24)
+    crash_between_swaps()
+    with pytest.raises(OSError, match="simulated crash"):
+        rebuild_fused_index(spark, CLIPS, index)
+    monkeypatch.undo()
+
+    _verify_index_health([index.text, index.audio])
+    # at n=24, ids 0-15 form four families and 16-23 are singletons
+    want = {
+        f"clip{i:08d}": f"clip{(i // 4) * 4 if i < 16 else i:08d}" for i in range(24)
+    }
+    for d in (
+        index.text.sig_dir,
+        index.text.keys_dir,
+        index.audio.sig_dir,
+        index.audio.keys_dir,
+        index.labels_dir,
+    ):
+        got = {
+            r.clip_id: r.cluster_id
+            for r in spark.read.parquet(d).select("clip_id", "cluster_id").collect()
+        }
+        assert got == want, d
+        assert not os.path.exists(d + ".rebuild") and not os.path.exists(d + ".old")
+    assert not os.path.exists(_swap_marker(index.labels_dir))
+
+
 def test_fused_indexes_store_no_payloads(spark, index):
     _attach_mod3(spark, index, n=24)
     for d in (
@@ -182,11 +217,13 @@ def test_fused_rebuild_refuses_while_stream_active(spark, index):
         os.remove(lock)
 
 
-def test_fused_stream_holds_both_sub_index_leases(spark, index, tmp_path):
+def test_fused_stream_holds_both_sub_index_leases(
+    spark, index, tmp_path, monkeypatch
+):
     """The fused stream must fence BOTH single-axis rebuilds: holding only
     the text lease would let rebuild_audio_index(index.audio) swap the
     SHARED labels table out from under the live stream."""
-    import lsh_hdc_spark.streaming.fused as fused_mod
+    import lsh_hdc_spark.streaming.ingest as ingest_mod
     from lsh_hdc_spark.streaming.fused import run_fused_attach_stream
 
     src = str(tmp_path / "src")
@@ -195,25 +232,24 @@ def test_fused_stream_holds_both_sub_index_leases(spark, index, tmp_path):
     schema = spark.read.parquet(src).schema
 
     seen = []
-    orig = fused_mod.attach_fused_batch
+    orig = ingest_mod._attach
 
-    def _spy(batch, cfg, idx, **kw):
+    def _spy(batch, id_col, parts):
+        (_, text_ix), (_, audio_ix) = parts
         seen.append(
             (
-                os.path.exists(_lock_path(idx.text)),
-                os.path.exists(_lock_path(idx.audio)),
+                os.path.exists(_lock_path(text_ix)),
+                os.path.exists(_lock_path(audio_ix)),
             )
         )
-        return orig(batch, cfg, idx, **kw)
+        return orig(batch, id_col, parts)
 
-    fused_mod.attach_fused_batch = _spy
-    try:
-        run_fused_attach_stream(
-            spark, src, schema, CLIPS, index, str(tmp_path / "ckpt_lease"),
-            available_now=True,
-        )
-    finally:
-        fused_mod.attach_fused_batch = orig
+    monkeypatch.setattr(ingest_mod, "_attach", _spy)
+    run_fused_attach_stream(
+        spark, src, schema, CLIPS, index, str(tmp_path / "ckpt_lease"),
+        available_now=True,
+    )
+    monkeypatch.undo()
     assert seen and all(t and a for t, a in seen), seen
     assert not os.path.exists(_lock_path(index.text))
     assert not os.path.exists(_lock_path(index.audio))
