@@ -39,7 +39,8 @@ one semi-join fetch of the DISTINCT candidate ids' bytes (pinned before
 the two pair-join references, so neither join side re-scans the table);
 the bucket shuffle carries (clip_id, key) only; candidate pairs are
 generated per bucket under a size cap with a drop census (never
-silently, op 25's clause).
+silently, op 25's clause) by the helpers every axis shares
+(``pairs._bucket_pairs``, ``pairs._verify_join``, ``pairs._bucket_census``).
 """
 
 from __future__ import annotations
@@ -52,6 +53,7 @@ from pyspark.sql import functions as F
 from ..functions.audio import decode_clip, snr_db
 from ..functions.hashing import GOLDEN, as_i64, mix64
 from .cc import assign_clusters
+from .pairs import _bucket_census, _bucket_pairs, _verify_join
 
 N_BANDS = 32
 #: band is SET iff its energy is within 20 dB of the loudest band
@@ -66,21 +68,28 @@ MAX_PROBE_BANDS = 4
 BUCKET_CAP = 512
 
 
-def _band_energies(pcm: np.ndarray) -> np.ndarray:
-    """N_BANDS equal-width band energies of one clip's spectrum."""
-    spec = np.abs(np.fft.rfft(pcm.astype(np.float64))) ** 2
-    # drop DC, split the rest into N_BANDS nearly-equal slices
-    spec = spec[1:]
-    if spec.size < N_BANDS:
-        spec = np.pad(spec, (0, N_BANDS - spec.size))
-    edges = np.linspace(0, spec.size, N_BANDS + 1).astype(np.int64)
+def _power(pcm: np.ndarray) -> np.ndarray:
+    """Power spectrum of one clip."""
+    return np.abs(np.fft.rfft(pcm.astype(np.float64))) ** 2
+
+
+def _band_power(power: np.ndarray, n_bands: int) -> np.ndarray:
+    """n_bands equal-width band energies of a power spectrum, DC dropped
+    (so silence maps to all-zero)."""
+    spec = power[1:]
+    if spec.size < n_bands:
+        spec = np.pad(spec, (0, n_bands - spec.size))
+    edges = np.linspace(0, spec.size, n_bands + 1).astype(np.int64)
     return np.add.reduceat(spec, edges[:-1])
 
 
-def _mask_keys(pcm: np.ndarray, sr_hz: int) -> np.ndarray:
+def _mask_keys(
+    pcm: np.ndarray, sr_hz: int, power: np.ndarray | None = None
+) -> np.ndarray:
     """uint64 bucket keys for one clip: base occupancy mask plus one key
-    per marginal on/off combination (multi-probe)."""
-    e = _band_energies(pcm)
+    per marginal on/off combination (multi-probe).  Pass the clip's
+    `power` spectrum when it is already computed."""
+    e = _band_power(_power(pcm) if power is None else power, N_BANDS)
     peak = float(e.max())
     if peak <= 0.0:  # digital silence: fingerprint carries length only
         masks = np.array([0], dtype=np.uint64)
@@ -118,17 +127,17 @@ def _mask_keys(pcm: np.ndarray, sr_hz: int) -> np.ndarray:
 SPEC_BINS = 128
 
 
-def _spec_profile(pcm: np.ndarray) -> np.ndarray:
-    """SPEC_BINS equal-width power-spectrum band energies — the compact
-    verify surrogate the streaming audio index stores INSTEAD of PCM bytes
-    (streaming/audio_ingest.py).  Same binning scheme as _band_energies at
-    4x the resolution; DC dropped so silence maps to all-zero."""
-    spec = np.abs(np.fft.rfft(pcm.astype(np.float64))) ** 2
-    spec = spec[1:]
-    if spec.size < SPEC_BINS:
-        spec = np.pad(spec, (0, SPEC_BINS - spec.size))
-    edges = np.linspace(0, spec.size, SPEC_BINS + 1).astype(np.int64)
-    return np.add.reduceat(spec, edges[:-1])
+def _decoded(pdf: pd.DataFrame, id_col: str):
+    """(id, pcm, sr_hz) per clip of an Arrow batch that decodes to at least
+    one sample; empty and sample-less payloads are skipped."""
+    for cid, data, sr, codec in zip(
+        pdf[id_col], pdf["bytes"], pdf["sr_hz"], pdf["codec"]
+    ):
+        if data is None or len(data) == 0:
+            continue
+        pcm, _ = decode_clip(bytes(data), str(codec))
+        if pcm.size:
+            yield cid, pcm, int(sr)
 
 
 def audio_signatures(clips: DataFrame, id_col: str = "clip_id") -> DataFrame:
@@ -145,17 +154,11 @@ def audio_signatures(clips: DataFrame, id_col: str = "clip_id") -> DataFrame:
     def _sig(batches):
         for pdf in batches:
             ids, keys, specs, nsamp = [], [], [], []
-            for cid, data, sr, codec in zip(
-                pdf[id_col], pdf["bytes"], pdf["sr_hz"], pdf["codec"]
-            ):
-                if data is None or len(data) == 0:
-                    continue
-                pcm, _ = decode_clip(bytes(data), str(codec))
-                if pcm.size == 0:
-                    continue
+            for cid, pcm, sr in _decoded(pdf, id_col):
+                power = _power(pcm)
                 ids.append(cid)
-                keys.append(as_i64(_mask_keys(pcm, int(sr))))
-                specs.append(_spec_profile(pcm))
+                keys.append(as_i64(_mask_keys(pcm, sr, power)))
+                specs.append(_band_power(power, SPEC_BINS))
                 nsamp.append(pcm.size)
             # object dtype is load-bearing for the list columns: a batch
             # where EVERY clip was skipped (all-undecodable) yields empty
@@ -187,15 +190,8 @@ def audio_fingerprints(
         for pdf in batches:
             ids: list[str] = []
             keys: list[np.ndarray] = []
-            for cid, data, sr, codec in zip(
-                pdf[id_col], pdf["bytes"], pdf["sr_hz"], pdf["codec"]
-            ):
-                if data is None or len(data) == 0:
-                    continue
-                pcm, _ = decode_clip(bytes(data), str(codec))
-                if pcm.size == 0:
-                    continue
-                ks = _mask_keys(pcm, int(sr))
+            for cid, pcm, sr in _decoded(pdf, id_col):
+                ks = _mask_keys(pcm, sr)
                 ids.extend([cid] * ks.size)
                 keys.append(ks)
             flat = (
@@ -213,50 +209,20 @@ def audio_fingerprints(
 def audio_candidate_pairs(
     fps: DataFrame, id_col: str = "clip_id", bucket_cap: int = BUCKET_CAP
 ) -> DataFrame:
-    """(src, dst) distinct candidate pairs from shared bucket keys.
-    Buckets above `bucket_cap` are excluded from pair generation — use
-    audio_bucket_census to count what a cap drops (never silently).
-    Pass a MATERIALIZED `fps` (audio_dedup_clusters checkpoints it) so
-    the byte-scanning fingerprint pass is not re-run per self-join side."""
-    # window-count bucket sizes over one key exchange (see
-    # operators/pairs.py::candidate_pairs)
-    from pyspark.sql import Window
-
-    small = (
-        fps.withColumn("n", F.count("*").over(Window.partitionBy("key")))
-        .where((F.col("n") >= 2) & (F.col("n") <= bucket_cap))
-        .drop("n")
-    )
-    a = small.select("key", F.col(id_col).alias("src"))
-    b = small.select("key", F.col(id_col).alias("dst"))
-    return (
-        a.join(b, "key")
-        .where(F.col("src") < F.col("dst"))
-        .select("src", "dst")
-        .distinct()
-    )
+    """(src, dst) distinct candidate pairs from shared bucket keys
+    (``pairs._bucket_pairs``).  Buckets above `bucket_cap` are excluded
+    from pair generation — use audio_bucket_census to count what a cap
+    drops (never silently)."""
+    pairs = _bucket_pairs(fps, id_col, "key", bucket_cap)
+    return pairs.select("src", "dst").distinct()
 
 
 def audio_bucket_census(
     fps: DataFrame, bucket_cap: int = BUCKET_CAP
 ) -> DataFrame:
     """(tier, n_buckets, n_rows, max_bucket) — bucket-size accounting for
-    the cap, same contract as the text path's hot-band census (op 25)."""
-    sizes = fps.groupBy("key").agg(F.count("*").alias("n"))
-    return (
-        sizes.withColumn(
-            "tier",
-            F.when(F.col("n") == 1, F.lit("singleton"))
-            .when(F.col("n") <= bucket_cap, F.lit("kept"))
-            .otherwise(F.lit("dropped")),
-        )
-        .groupBy("tier")
-        .agg(
-            F.count("*").alias("n_buckets"),
-            F.sum("n").alias("n_rows"),
-            F.max("n").alias("max_bucket"),
-        )
-    )
+    the cap (``pairs._bucket_census``; searched buckets are tier 'kept')."""
+    return _bucket_census(fps, "key", [("kept", bucket_cap)])
 
 
 def audio_verify_pairs(
@@ -307,16 +273,7 @@ def audio_verify_pairs(
         .mapInPandas(_decode, f"{id_col} string, pcm array<smallint>")
         .localCheckpoint(eager=True)
     )
-    j = (
-        pairs.join(
-            side.select(F.col(id_col).alias("src"), F.col("pcm").alias("pcm_a")),
-            "src",
-        )
-        .join(
-            side.select(F.col(id_col).alias("dst"), F.col("pcm").alias("pcm_b")),
-            "dst",
-        )
-    )
+    j = _verify_join(pairs, side, id_col)
 
     def _snr(batches):
         for pdf in batches:

@@ -7,6 +7,10 @@ Two paths:
    — bucket on band keys of the sign pattern, search within buckets only.
    The scale path: recall < 1 (tunable via bands/rows), cost ~ bucket sizes.
 
+The LSH and IVF searches and ``cosine_dup_edges`` differ only in how rows
+are keyed; all three then share one tail (``_ann_edges``) over the shared
+bucket self-join and payload fetch in operators/pairs.py.
+
 Numeric kernels (unit-normalization, hyperplane projections, dot products)
 run as vectorized numpy inside mapInPandas / pandas_udf — Catalyst
 higher-order functions (aggregate/zip_with) evaluate interpreted per
@@ -22,6 +26,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.hashing import as_i64, hash_seeds, mix64
+from .pairs import _bucket_census, _bucket_pairs, _verify_join
 
 
 def _dot_udf() -> Column:
@@ -36,8 +41,12 @@ def _dot_udf() -> Column:
     return _dot
 
 
-def _unit_rows(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
-    """(id, _unit: array<double>) — L2-normalized vectors, numpy-batched."""
+def _unit_rows(
+    df: DataFrame, id_col: str, vec_col: str, extra=None, extra_schema: str = ""
+) -> DataFrame:
+    """(id, _unit: array<double>[, extra columns]) — L2-normalized vectors,
+    numpy-batched.  `extra(u)` maps one batch's unit matrix to a dict of
+    further columns, declared by `extra_schema` (", name type, ...")."""
     id_t = df.schema[id_col].dataType.simpleString()
 
     def _norm(batches):
@@ -48,10 +57,11 @@ def _unit_rows(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
             n = np.linalg.norm(m, axis=1, keepdims=True)
             n[n == 0] = 1.0
             u = m / n
-            yield pd.DataFrame({id_col: pdf[id_col], "_unit": list(u)})
+            cols = extra(u) if extra else {}
+            yield pd.DataFrame({id_col: pdf[id_col], "_unit": list(u), **cols})
 
     return df.select(id_col, vec_col).mapInPandas(
-        _norm, f"{id_col} {id_t}, _unit array<double>"
+        _norm, f"{id_col} {id_t}, _unit array<double>{extra_schema}"
     )
 
 
@@ -133,39 +143,60 @@ def _keyed_rows(
         raise ValueError("bands must divide n_bits")
     r = n_bits // bands
     bseeds = hash_seeds(bands, seed ^ 0xB17)
-    id_t = df.schema[id_col].dataType.simpleString()
+    planes = {}  # per vector width, built on the first batch
 
-    def _keys(batches):
-        planes = None
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            m = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            if planes is None:
-                planes = _hyperplanes(m.shape[1], n_bits, seed).T  # (dim, n_bits)
-            n = np.linalg.norm(m, axis=1, keepdims=True)
-            n[n == 0] = 1.0
-            u = m / n
-            bits = (u @ planes >= 0).astype(np.uint64)  # (batch, n_bits)
-            keys = np.empty((m.shape[0], bands), dtype=np.uint64)
-            with np.errstate(over="ignore"):
-                for j in range(bands):
-                    chunk = bits[:, j * r : (j + 1) * r]
-                    packed = (chunk << np.arange(r, dtype=np.uint64)[None, :]).sum(
-                        axis=1, dtype=np.uint64
-                    )
-                    keys[:, j] = mix64(packed ^ bseeds[j])
-            keys_i = as_i64(keys.reshape(-1)).reshape(keys.shape)
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "_unit": list(u),
-                    "bkeys": list(keys_i),
-                }
+    def _keys(u):
+        dim = u.shape[1]
+        if dim not in planes:
+            planes[dim] = _hyperplanes(dim, n_bits, seed).T  # (dim, n_bits)
+        bits = (u @ planes[dim] >= 0).astype(np.uint64)  # (batch, n_bits)
+        keys = np.empty((u.shape[0], bands), dtype=np.uint64)
+        with np.errstate(over="ignore"):
+            for j in range(bands):
+                chunk = bits[:, j * r : (j + 1) * r]
+                packed = (chunk << np.arange(r, dtype=np.uint64)[None, :]).sum(
+                    axis=1, dtype=np.uint64
+                )
+                keys[:, j] = mix64(packed ^ bseeds[j])
+        return {"bkeys": list(as_i64(keys.reshape(-1)).reshape(keys.shape))}
+
+    return _unit_rows(df, id_col, vec_col, _keys, ", bkeys array<long>")
+
+
+def _key_rows(keyed: DataFrame, id_col: str, keys_col: str) -> DataFrame:
+    """(id, key) — one row per bucket key of a keyed-rows frame."""
+    return keyed.select(id_col, F.explode(keys_col).alias("key"))
+
+
+def _ann_edges(keyed: DataFrame, id_col: str, keys_col: str, cap: int) -> DataFrame:
+    """(src, dst, cosine) for every distinct id pair sharing a bucket of
+    2..cap rows — the tail every search shares: keyed rows ->
+    ``pairs._bucket_pairs`` -> ``pairs._verify_join`` -> exact dot.  The
+    bucket shuffles move (id, key) rows only; unit vectors join back after
+    the distinct candidate set is formed.  The keyed rows (an Arrow pass)
+    feed both the keys and the vector fetch, so they are pinned with a
+    lazy localCheckpoint, which the context cleaner releases: nothing
+    lands in the session's cache manager for the caller to unpersist."""
+    keyed = keyed.localCheckpoint(eager=False)
+    cand = (
+        _bucket_pairs(_key_rows(keyed, id_col, keys_col), id_col, "key", cap)
+        .select("src", "dst")
+        .distinct()
+    )
+    units = keyed.select(id_col, "_unit")
+    return _verify_join(cand, units, id_col).select(
+        "src", "dst", _dot_udf()(F.col("_unit_a"), F.col("_unit_b")).alias("cosine")
+    )
+
+
+def _ann_topk(edges: DataFrame, k: int) -> DataFrame:
+    return _topk(
+        _mirror(
+            edges.select(
+                F.col("src").alias("vec_id"), F.col("dst").alias("neighbor_id"), "cosine"
             )
-
-    return df.select(id_col, vec_col).mapInPandas(
-        _keys, f"{id_col} {id_t}, _unit array<double>, bkeys array<long>"
+        ),
+        k,
     )
 
 
@@ -179,28 +210,11 @@ def ann_bucket_stats(
     bucket_cap: int = 2000,
 ) -> DataFrame:
     """(tier, n_buckets, n_rows, max_bucket) census of the ANN hash buckets
-    — the never-drop-silently policy metric, mirroring
-    operators/pairs.py::bucket_stats: tier 'dropped' counts buckets above
-    bucket_cap (excluded from the search), 'cold' the searched ones,
-    'singleton' the unpaired ones."""
-    keyed = _keyed_rows(df, id_col, vec_col, n_bits, bands, seed).select(
-        id_col, F.explode("bkeys").alias("bkey")
-    )
-    sizes = keyed.groupBy("bkey").agg(F.count("*").alias("bucket_size"))
-    tier = (
-        F.when(F.col("bucket_size") < 2, F.lit("singleton"))
-        .when(F.col("bucket_size") <= bucket_cap, F.lit("cold"))
-        .otherwise(F.lit("dropped"))
-    )
-    return (
-        sizes.select(tier.alias("tier"), "bucket_size")
-        .groupBy("tier")
-        .agg(
-            F.count("*").alias("n_buckets"),
-            F.sum("bucket_size").alias("n_rows"),
-            F.max("bucket_size").alias("max_bucket"),
-        )
-    )
+    — the never-drop-silently policy metric (``pairs._bucket_census``):
+    tier 'dropped' counts buckets above bucket_cap (excluded from the
+    search), 'cold' the searched ones, 'singleton' the unpaired ones."""
+    keyed = _keyed_rows(df, id_col, vec_col, n_bits, bands, seed)
+    return _bucket_census(_key_rows(keyed, id_col, "bkeys"), "key", [("cold", bucket_cap)])
 
 
 def cosine_dup_edges(
@@ -224,40 +238,9 @@ def cosine_dup_edges(
 
     # dust-sized corpora run under a right-sized cloned session (micro.py)
     df, _ = micro_rebound(df)
-    keyed_rows = _keyed_rows(df, id_col, vec_col, n_bits, bands, seed)
-    from pyspark.storagelevel import StorageLevel
-
-    keyed_rows = keyed_rows.persist(StorageLevel.MEMORY_AND_DISK)
-    # bucket sizes via a window count over the bkey exchange, pinned so
-    # both self-join sides read one materialization with the partitioning
-    # preserved — see operators/pairs.py::candidate_pairs
-    keyed = (
-        keyed_rows.select(id_col, F.explode("bkeys").alias("bkey"))
-        .withColumn("bs", F.count("*").over(Window.partitionBy("bkey")))
-        .where((F.col("bs") >= 2) & (F.col("bs") <= bucket_cap))
-        .localCheckpoint(eager=False)
-    )
-    a = keyed.select("bkey", F.col(id_col).alias("src"))
-    b = keyed.select("bkey", F.col(id_col).alias("dst"))
-    cand = (
-        a.join(b, "bkey")
-        .where(F.col("src") < F.col("dst"))
-        .select("src", "dst")
-        .distinct()
-    )
-    units = keyed_rows.select(id_col, "_unit")
-    dot = _dot_udf()
-    return (
-        cand.join(
-            units.select(F.col(id_col).alias("src"), F.col("_unit").alias("va")),
-            "src",
-        )
-        .join(
-            units.select(F.col(id_col).alias("dst"), F.col("_unit").alias("vb")),
-            "dst",
-        )
-        .select("src", "dst", dot(F.col("va"), F.col("vb")).alias("cosine"))
-        .where(F.col("cosine") >= threshold)
+    keyed = _keyed_rows(df, id_col, vec_col, n_bits, bands, seed)
+    return _ann_edges(keyed, id_col, "bkeys", bucket_cap).where(
+        F.col("cosine") >= threshold
     )
 
 
@@ -284,42 +267,8 @@ def ann_topk(
 
     # dust-sized corpora run under a right-sized cloned session (micro.py)
     df, _ = micro_rebound(df)
-    keyed_rows = _keyed_rows(df, id_col, vec_col, n_bits, bands, seed)
-    from pyspark.storagelevel import StorageLevel
-
-    keyed_rows = keyed_rows.persist(StorageLevel.MEMORY_AND_DISK)
-    # window-count bucket sizes over one bkey exchange, pinned for both
-    # self-join sides (see candidate_pairs)
-    keyed = (
-        keyed_rows.select(id_col, F.explode("bkeys").alias("bkey"))
-        .withColumn("bs", F.count("*").over(Window.partitionBy("bkey")))
-        .where((F.col("bs") >= 2) & (F.col("bs") <= bucket_cap))
-        .localCheckpoint(eager=False)
-    )
-    a = keyed.select("bkey", F.col(id_col).alias("vec_id"))
-    b = keyed.select("bkey", F.col(id_col).alias("neighbor_id"))
-    cand_ids = (
-        a.join(b, "bkey")
-        .where(F.col("vec_id") < F.col("neighbor_id"))
-        .select("vec_id", "neighbor_id")
-        .distinct()
-    )
-    units = keyed_rows.select(id_col, "_unit")
-    dot = _dot_udf()
-    cand = (
-        cand_ids.join(
-            units.select(F.col(id_col).alias("vec_id"), F.col("_unit").alias("va")),
-            "vec_id",
-        )
-        .join(
-            units.select(
-                F.col(id_col).alias("neighbor_id"), F.col("_unit").alias("vb")
-            ),
-            "neighbor_id",
-        )
-        .select("vec_id", "neighbor_id", dot(F.col("va"), F.col("vb")).alias("cosine"))
-    )
-    return _topk(_mirror(cand), k)
+    keyed = _keyed_rows(df, id_col, vec_col, n_bits, bands, seed)
+    return _ann_topk(_ann_edges(keyed, id_col, "bkeys", bucket_cap), k)
 
 
 # ---------------------------------------------------------------------------
@@ -436,38 +385,29 @@ def _ivf_keyed(
     df: DataFrame,
     id_col: str,
     vec_col: str,
-    centroids: np.ndarray,
+    n_lists: int,
     nprobe: int,
+    seed: int,
+    iters: int,
+    centroids: np.ndarray | None,
 ) -> DataFrame:
     """(id, _unit, cids: array<int>) — unit vectors plus the nprobe nearest
-    centroid ids (descending dot, index tie-break), numpy-batched."""
-    id_t = df.schema[id_col].dataType.simpleString()
-    c = centroids
-
-    def _probe(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            m = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            n = np.linalg.norm(m, axis=1, keepdims=True)
-            n[n == 0] = 1.0
-            u = m / n
-            d = u @ c.T  # (batch, n_lists)
-            p = min(nprobe, c.shape[0])
-            # argsort (stable) rather than argpartition: deterministic
-            # order with index tie-break, and n_lists is small
-            top = np.argsort(-d, axis=1, kind="stable")[:, :p]
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "_unit": list(u),
-                    "cids": list(top.astype(np.int32)),
-                }
-            )
-
-    return df.select(id_col, vec_col).mapInPandas(
-        _probe, f"{id_col} {id_t}, _unit array<double>, cids array<int>"
+    centroid ids (descending dot, index tie-break), numpy-batched; trains
+    the centroids (``ivf_train``) unless `centroids` are given."""
+    c = (
+        centroids
+        if centroids is not None
+        else ivf_train(df, id_col, vec_col, n_lists=n_lists, seed=seed, iters=iters)
     )
+    p = min(nprobe, c.shape[0])
+
+    def _probe(u):
+        # argsort (stable) rather than argpartition: deterministic order
+        # with index tie-break, and n_lists is small
+        top = np.argsort(-(u @ c.T), axis=1, kind="stable")[:, :p]
+        return {"cids": list(top.astype(np.int32))}
+
+    return _unit_rows(df, id_col, vec_col, _probe, ", cids array<int>")
 
 
 def ivf_list_stats(
@@ -490,29 +430,10 @@ def ivf_list_stats(
     parameters as the ann_topk_ivf call (training is deterministic, so
     equal parameters reproduce bit-identical centroids) — or pass the
     search's `centroids` directly to skip retraining."""
-    cent = (
-        centroids
-        if centroids is not None
-        else ivf_train(df, id_col, vec_col, n_lists=n_lists, seed=seed, iters=iters)
-    )
-    keyed = _ivf_keyed(df, id_col, vec_col, cent, nprobe).select(
-        id_col, F.explode("cids").alias("cid")
-    )
-    sizes = keyed.groupBy("cid").agg(F.count("*").alias("list_size"))
-    tier = (
-        F.when(F.col("list_size") < 2, F.lit("singleton"))
-        .when(F.col("list_size") <= list_cap, F.lit("cold"))
-        .otherwise(F.lit("dropped"))
-    )
-    return (
-        sizes.select(tier.alias("tier"), "list_size")
-        .groupBy("tier")
-        .agg(
-            F.count("*").alias("n_lists"),
-            F.sum("list_size").alias("n_rows"),
-            F.max("list_size").alias("max_list"),
-        )
-    )
+    keyed = _ivf_keyed(df, id_col, vec_col, n_lists, nprobe, seed, iters, centroids)
+    return _bucket_census(
+        _key_rows(keyed, id_col, "cids"), "key", [("cold", list_cap)]
+    ).withColumnsRenamed({"n_buckets": "n_lists", "max_bucket": "max_list"})
 
 
 def ann_topk_ivf(
@@ -539,44 +460,5 @@ def ann_topk_ivf(
     candidate-id set — probe shuffles move (id, cid) rows only.  Pass
     `centroids` (from ``ivf_train``) to reuse one training across search,
     census, and repeated queries."""
-    cent = (
-        centroids
-        if centroids is not None
-        else ivf_train(df, id_col, vec_col, n_lists=n_lists, seed=seed, iters=iters)
-    )
-    keyed_rows = _ivf_keyed(df, id_col, vec_col, cent, nprobe)
-    from pyspark.storagelevel import StorageLevel
-
-    keyed_rows = keyed_rows.persist(StorageLevel.MEMORY_AND_DISK)
-    # window-count list sizes over one cid exchange, pinned for both
-    # self-join sides (see candidate_pairs)
-    keyed = (
-        keyed_rows.select(id_col, F.explode("cids").alias("cid"))
-        .withColumn("ls", F.count("*").over(Window.partitionBy("cid")))
-        .where((F.col("ls") >= 2) & (F.col("ls") <= list_cap))
-        .localCheckpoint(eager=False)
-    )
-    a = keyed.select("cid", F.col(id_col).alias("vec_id"))
-    b = keyed.select("cid", F.col(id_col).alias("neighbor_id"))
-    cand_ids = (
-        a.join(b, "cid")
-        .where(F.col("vec_id") < F.col("neighbor_id"))
-        .select("vec_id", "neighbor_id")
-        .distinct()
-    )
-    units = keyed_rows.select(id_col, "_unit")
-    dot = _dot_udf()
-    cand = (
-        cand_ids.join(
-            units.select(F.col(id_col).alias("vec_id"), F.col("_unit").alias("va")),
-            "vec_id",
-        )
-        .join(
-            units.select(
-                F.col(id_col).alias("neighbor_id"), F.col("_unit").alias("vb")
-            ),
-            "neighbor_id",
-        )
-        .select("vec_id", "neighbor_id", dot(F.col("va"), F.col("vb")).alias("cosine"))
-    )
-    return _topk(_mirror(cand), k)
+    keyed = _ivf_keyed(df, id_col, vec_col, n_lists, nprobe, seed, iters, centroids)
+    return _ann_topk(_ann_edges(keyed, id_col, "cids", list_cap), k)

@@ -25,6 +25,17 @@ JVM, AQE skew-join eligible) with a three-tier hot-band policy
 
 All id comparisons order pairs canonically (src < dst) so output is
 deterministic under any partitioning (SURVEY.md §2.5.5).
+
+Every dedup axis has this bucket -> pair -> fetch -> verify shape, so the
+steps live here once and the other axes (knn, substring, audio_dedup,
+streaming/audio_ingest) call them, changing only the verify predicate —
+the LSH similarity join of "Implementing Distributed Similarity Joins
+using Locality Sensitive Hashing" (EDBT 2022, PAPERS.md):
+
+ - ``_bucket_pairs``: window-count the bucket key, keep 2 <= size <= cap,
+   pin lazily, self-join with src < dst (optionally carrying columns);
+ - ``_verify_join``: fetch a per-id side frame onto both pair ends;
+ - ``_bucket_census``: (tier, n_buckets, n_rows, max_bucket) per cap tier.
 """
 
 from __future__ import annotations
@@ -43,18 +54,21 @@ def band_key_rows(signed_df: DataFrame, cfg: DedupConfig) -> DataFrame:
     )
 
 
-def bucket_stats(keys: DataFrame, cfg: DedupConfig) -> DataFrame:
-    """Per-tier bucket census: (tier, n_buckets, n_rows).  Feeds the stage
-    metrics table; `dropped` tier > 0 must be surfaced, never hidden."""
-    sizes = keys.groupBy("band_key").agg(F.count("*").alias("bucket_size"))
-    tier = (
-        F.when(F.col("bucket_size") < 2, F.lit("singleton"))
-        .when(F.col("bucket_size") <= cfg.pair_cap, F.lit("cold"))
-        .when(F.col("bucket_size") <= cfg.drop_cap, F.lit("hot_anchor"))
-        .otherwise(F.lit("dropped"))
-    )
+def _bucket_census(
+    rows: DataFrame, key: str, tiers: list[tuple[str, int]]
+) -> DataFrame:
+    """(tier, n_buckets, n_rows, max_bucket) over the buckets of `key`.
+    A bucket of one row is `singleton`; a larger one takes the first
+    (label, cap) of `tiers` whose cap it does not exceed, else `dropped`.
+    Every axis's never-drop-silently census (op 25) is this one body."""
+    size = F.col("bucket_size")
+    tier = F.when(size < 2, F.lit("singleton"))
+    for label, cap in tiers:
+        tier = tier.when(size <= cap, F.lit(label))
     return (
-        sizes.select(tier.alias("tier"), "bucket_size")
+        rows.groupBy(key)
+        .agg(F.count("*").alias("bucket_size"))
+        .select(tier.otherwise(F.lit("dropped")).alias("tier"), "bucket_size")
         .groupBy("tier")
         .agg(
             F.count("*").alias("n_buckets"),
@@ -64,50 +78,88 @@ def bucket_stats(keys: DataFrame, cfg: DedupConfig) -> DataFrame:
     )
 
 
-def candidate_pairs(signed_df: DataFrame, cfg: DedupConfig) -> DataFrame:
-    """Distinct candidate (src, dst) pairs with src < dst from shared band
-    keys, under the tiered hot-band policy."""
-    iid = cfg.id_col
-    keys = band_key_rows(signed_df, cfg)
+def bucket_stats(keys: DataFrame, cfg: DedupConfig) -> DataFrame:
+    """Per-tier bucket census: (tier, n_buckets, n_rows, max_bucket).  Feeds
+    the stage metrics table; `dropped` tier > 0 must be surfaced, never
+    hidden."""
+    return _bucket_census(
+        keys, "band_key", [("cold", cfg.pair_cap), ("hot_anchor", cfg.drop_cap)]
+    )
 
-    # bucket_size via a window count over the band-key exchange: the keys
-    # frame is shuffled by band_key exactly ONCE, and the self-join below
-    # reuses that partitioning.  The previous groupBy + join-back shuffled
-    # the keys twice (once into the aggregate, once into the join) and
-    # added two stage barriers per query (guide §2.3/§2.4).  Skew posture
-    # is unchanged: a degenerate band key lands in one partition either
-    # way, the window is count-only (streaming over the sorted run), and
-    # the hot/drop tiers bound what is done with it afterwards.
-    #
-    # The sized frame is then PINNED: it feeds both self-join sides and
-    # the salted hot path, and DataFrame self-references re-evaluate their
-    # subtree (runtime-verified: zero ReusedExchange, the explode+window
-    # chain executed 3x).  localCheckpoint preserves the band_key hash
-    # partitioning on 4.1.2, so the downstream joins/aggregations read the
-    # materialized blocks with NO further exchange — measured 2.1x on the
-    # 20k-clip label pipeline (construct 5.1-6.4 s -> 2.9-3.0 s).  At
-    # corpus scale this trades 2+ extra shuffles of the keys table for
-    # one local materialization + reads — the substring/audio fingerprint
-    # pinning discipline (PLANS.md §9).
-    keys = (
-        keys.withColumn(
-            "bucket_size", F.count("*").over(Window.partitionBy("band_key"))
-        )
-        .where(F.col("bucket_size") >= 2)
+
+def _sized_buckets(rows: DataFrame, key: str, cap: int) -> DataFrame:
+    """`rows` whose `key` bucket holds 2..cap rows, with that size as
+    `bucket_size`, lazily pinned.
+
+    The size is a window count over the key exchange, so the rows shuffle
+    by key once instead of twice (a groupBy plus a join back).  The pin
+    matters because a DataFrame self-join re-evaluates its whole subtree
+    per side: without it the upstream explode/Arrow pass and the window
+    ran once per reference.  With AQE off the pinned scan keeps the key's
+    hash partitioning and feeds the self-join with no further exchange;
+    with AQE on, partition coalescing drops that partitioning, so one
+    exchange of the pinned rows sits below the join and its other side
+    reuses it (ReusedExchange).  The pin is a lazy localCheckpoint: under
+    AQE its upstream stages run when it is built, and its blocks are
+    released by the context cleaner, so no caller unpersists anything."""
+    return (
+        rows.withColumn("bucket_size", F.count("*").over(Window.partitionBy(key)))
+        .where(F.col("bucket_size").between(2, cap))
         .localCheckpoint(eager=False)
     )
 
-    cold = keys.where(F.col("bucket_size") <= cfg.pair_cap).drop("bucket_size")
-    hot = keys.where(
-        (F.col("bucket_size") > cfg.pair_cap)
-        & (F.col("bucket_size") <= cfg.drop_cap)
-    ).drop("bucket_size")
 
-    a = cold.select(F.col("band_key"), F.col(iid).alias("src"))
-    b = cold.select(F.col("band_key"), F.col(iid).alias("dst"))
-    pairs_cold = a.join(b, "band_key").where(F.col("src") < F.col("dst")).select(
-        "src", "dst"
+def _side(df: DataFrame, id_col: str, name: str, cols, sfx: str, *keep: str):
+    """`df` with `id_col` renamed to `name`, each of `cols` suffixed `sfx`,
+    and the `keep` columns as they are."""
+    return df.select(
+        *keep, F.col(id_col).alias(name), *[F.col(c).alias(c + sfx) for c in cols]
     )
+
+
+def _self_join(sized: DataFrame, id_col: str, key: str, carry=()) -> DataFrame:
+    return _side(sized, id_col, "src", carry, "_a", key).join(
+        _side(sized, id_col, "dst", carry, "_b", key), key
+    ).where(F.col("src") < F.col("dst"))
+
+
+def _bucket_pairs(
+    rows: DataFrame, id_col: str, key: str, cap: int, carry: tuple[str, ...] = ()
+) -> DataFrame:
+    """(key, src, dst, <carry>_a..., <carry>_b...): every pair of rows with
+    src < dst that share a `key` bucket of 2..cap rows — the one bucket
+    self-join behind every axis.  Buckets above `cap` pair nothing; count
+    them with ``_bucket_census``.  Each `carry` column rides both sides,
+    suffixed `_a` on the src side and `_b` on the dst side.  A pair
+    repeats once per bucket its two ids share."""
+    return _self_join(_sized_buckets(rows, key, cap), id_col, key, carry)
+
+
+def _verify_join(pairs: DataFrame, side: DataFrame, id_col: str) -> DataFrame:
+    """`pairs` (src, dst, ...) with the per-id `side` frame joined on as
+    src and again as dst — the one two-sided payload fetch before every
+    axis's verify.  Every other `side` column is suffixed `_a` on the src
+    side and `_b` on the dst side."""
+    cols = [c for c in side.columns if c != id_col]
+    return pairs.join(_side(side, id_col, "src", cols, "_a"), "src").join(
+        _side(side, id_col, "dst", cols, "_b"), "dst"
+    )
+
+
+def candidate_pairs(signed_df: DataFrame, cfg: DedupConfig) -> DataFrame:
+    """Distinct candidate (src, dst) pairs with src < dst from shared band
+    keys, under the tiered hot-band policy: the bucket self-join of
+    ``_bucket_pairs`` over the cold tier, salted anchors over the hot
+    tier, both read from one pinned sized frame (``_sized_buckets``)."""
+    iid = cfg.id_col
+    # measured 2.1x on the 20k-clip label pipeline (construct 5.1-6.4 s ->
+    # 2.9-3.0 s) against the unpinned plan, which ran the explode+window
+    # chain once per reference
+    keys = _sized_buckets(band_key_rows(signed_df, cfg), "band_key", cfg.drop_cap)
+    pairs_cold = _self_join(
+        keys.where(F.col("bucket_size") <= cfg.pair_cap), iid, "band_key"
+    ).select("src", "dst")
+    hot = keys.where(F.col("bucket_size") > cfg.pair_cap).drop("bucket_size")
 
     # --- salted anchor path for hot buckets --------------------------------
     hid = F.xxhash64(F.col(iid))  # deterministic anchor order, skew-free
@@ -159,21 +211,11 @@ def verify_pairs(
     side_cols = [F.col(iid), F.array_distinct("shingles_h").alias("sh")]
     if use_sketch:
         side_cols.append(F.col("sketch"))
-    side = signed_df.select(*side_cols)
-    left = side.select(
-        F.col(iid).alias("src"),
-        F.col("sh").alias("sh_a"),
-        *([F.col("sketch").alias("sk_a")] if use_sketch else []),
-    )
-    right = side.select(
-        F.col(iid).alias("dst"),
-        F.col("sh").alias("sh_b"),
-        *([F.col("sketch").alias("sk_b")] if use_sketch else []),
-    )
-    j = pairs.join(left, "src").join(right, "dst")
+    j = _verify_join(pairs, signed_df.select(*side_cols), iid)
     if use_sketch:
         j = j.where(
-            F.bit_count(F.col("sk_a").bitwiseXOR(F.col("sk_b"))) <= cfg.max_hamming
+            F.bit_count(F.col("sketch_a").bitwiseXOR(F.col("sketch_b")))
+            <= cfg.max_hamming
         )
     inter = F.size(F.array_intersect("sh_a", "sh_b"))
     union = F.size("sh_a") + F.size("sh_b") - inter

@@ -15,8 +15,9 @@ Distributed design (a monolithic corpus suffix array does not shard):
     sharing a common substring of length >= min_len share at least one
     selected fingerprint — recall is guaranteed, with ~2/(w+1) of positions
     emitted instead of all of them.  Fingerprints shuffle by hash;
-    candidate pairs come from a bucket self-join with the same hot-bucket
-    cap policy as the LSH stage.
+    candidate pairs come from the shared bucket self-join
+    (``pairs._bucket_pairs``) with the same hot-bucket cap policy as the
+    LSH stage.
 
  2. **Verification — suffix array**: for each candidate pair, the exact
     longest common substring is computed from the suffix array (prefix-
@@ -34,6 +35,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .pairs import _bucket_census, _bucket_pairs, _verify_join
 
 _BASE = np.uint64(1000003)
 _K_DEFAULT = 16
@@ -189,29 +192,14 @@ def substring_bucket_stats(
     """Per-tier census of the winnowed-fingerprint buckets feeding
     ``substring_pairs``: (tier, n_buckets, n_rows, max_bucket).
 
-    Mirrors ``pairs.bucket_stats`` (op 25's never-drop-silently policy):
-    buckets larger than ``bucket_cap`` are EXCLUDED from candidate
-    generation in ``substring_pairs``, so the ``dropped`` tier here is the
-    exact audit of that exclusion — surface it in stage metrics whenever
-    the pass runs at scale (round-2 judge item 5: the drop used to be
-    invisible).
+    The shared ``pairs._bucket_census`` (op 25's never-drop-silently
+    policy): buckets larger than ``bucket_cap`` are EXCLUDED from
+    candidate generation in ``substring_pairs``, so the ``dropped`` tier
+    here is the exact audit of that exclusion — surface it in stage
+    metrics whenever the pass runs at scale.
     """
     fps = winnow_fingerprints(df, id_col, text_col, min_len=min_len, k=k)
-    sizes = fps.groupBy("fp").agg(F.count("*").alias("bucket_size"))
-    tier = (
-        F.when(F.col("bucket_size") < 2, F.lit("singleton"))
-        .when(F.col("bucket_size") <= bucket_cap, F.lit("cold"))
-        .otherwise(F.lit("dropped"))
-    )
-    return (
-        sizes.select(tier.alias("tier"), "bucket_size")
-        .groupBy("tier")
-        .agg(
-            F.count("*").alias("n_buckets"),
-            F.sum("bucket_size").alias("n_rows"),
-            F.max("bucket_size").alias("max_bucket"),
-        )
-    )
+    return _bucket_census(fps, "fp", [("cold", bucket_cap)])
 
 
 def _suffix_array(codes: np.ndarray) -> np.ndarray:
@@ -314,18 +302,12 @@ def substring_pairs(
     never ship a document body through a join and never touch the
     O(n log n) verify: they cost one vectorized window compare.
     """
-    # One winnowing pass, one fp exchange, one pinned frame: the sized
-    # fingerprint frame feeds BOTH self-join sides, and DataFrame
-    # self-references re-evaluate their subtree — without pinning, the
-    # winnowing Arrow pass over every document ran two extra times
-    # (measured 0.85 s/pass at sf0.1).  Pinning AFTER the window-count
-    # filter (see operators/pairs.py::candidate_pairs) also preserves the
-    # fp hash partitioning, so the pair self-join adds no exchange.
-    # ~115 B/row (id, pos, fp, two windows); at corpus scale this is the
-    # frame production spills to a temp table, the audio path's
-    # audio_fingerprints discipline.
-    from pyspark.sql import Window
-
+    # One winnowing pass, one pinned fingerprint frame: the bucket
+    # self-join (``pairs._bucket_pairs``) pins the sized fingerprints, so
+    # the winnowing Arrow pass over every document runs once, not once per
+    # join side (measured 0.85 s/pass at sf0.1).  ~115 B/row (id, pos, fp,
+    # two windows); at corpus scale this is the frame production spills to
+    # a temp table, the audio path's audio_fingerprints discipline.
     from ..micro import micro_rebound
 
     # dust-sized corpora run the whole pass under a right-sized cloned
@@ -335,23 +317,6 @@ def substring_pairs(
     fps = winnow_fingerprints(
         df, id_col, text_col, min_len=min_len, k=k, windows=True
     )
-    fps_ok = (
-        fps.withColumn("bs", F.count("*").over(Window.partitionBy("fp")))
-        .where((F.col("bs") >= 2) & (F.col("bs") <= bucket_cap))
-        .localCheckpoint(eager=False)
-    )
-    a = fps_ok.select(
-        "fp",
-        F.col(id_col).alias("src"),
-        F.col("lw").alias("lw_a"),
-        F.col("rw").alias("rw_a"),
-    )
-    b = fps_ok.select(
-        "fp",
-        F.col(id_col).alias("dst"),
-        F.col("lw").alias("lw_b"),
-        F.col("rw").alias("rw_b"),
-    )
 
     @F.pandas_udf("boolean")
     def _hit(
@@ -360,25 +325,20 @@ def substring_pairs(
         return pd.Series(_anchor_hits(lw_a, rw_a, lw_b, rw_b, min_len))
 
     hits = (
-        a.join(b, "fp")
-        .where(F.col("src") < F.col("dst"))
+        _bucket_pairs(fps, id_col, "fp", bucket_cap, carry=("lw", "rw"))
         .where(_hit("lw_a", "rw_a", "lw_b", "rw_b"))
         .select("src", "dst")
         .distinct()
     )
-
-    texts = df.select(F.col(id_col), _norm_text_col(F.col(text_col)).alias("_t"))
-    joined = (
-        hits.join(texts.select(F.col(id_col).alias("src"), F.col("_t").alias("ta")), "src")
-        .join(texts.select(F.col(id_col).alias("dst"), F.col("_t").alias("tb")), "dst")
-    )
+    texts = df.select(F.col(id_col), _norm_text_col(F.col(text_col)).alias("t"))
+    joined = _verify_join(hits, texts, id_col)
     id_t = df.schema[id_col].dataType.simpleString()
     schema = f"src {id_t}, dst {id_t}, match_len long"
 
     def _verify(batches):
         for pdf in batches:
             lens = [
-                lcs_length(ta, tb) for ta, tb in zip(pdf["ta"], pdf["tb"])
+                lcs_length(ta, tb) for ta, tb in zip(pdf["t_a"], pdf["t_b"])
             ]
             yield pd.DataFrame(
                 {"src": pdf["src"], "dst": pdf["dst"], "match_len": lens}

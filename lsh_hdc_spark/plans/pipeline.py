@@ -8,7 +8,10 @@ DataFrame plan:
     read -> [JVM codegen] shingle+hash -> [one Arrow UDF] sign/band
          -> explode band keys -> [shuffle] bucket self-join (tiered/salted)
          -> distinct pairs -> join-back shingles -> Jaccard verify
-         -> [iterative joins] connected components -> labels -> rollup
+         -> [one edge count] connected components, labelled on the driver
+            at or below cc.LOCAL_MAX_EDGES (1M) edges, else by iterative
+            star joins
+         -> [one join] labels -> rollup
 
 Heavy payload columns (clips.bytes) never enter the plan — only
 (id, text) are read (column pruning pushes this into the parquet scan);
@@ -40,8 +43,12 @@ def _edges_with_persisted(
 
 
 def dedup_edges(df: DataFrame, cfg: DedupConfig) -> DataFrame:
-    """Verified near-duplicate edge list (src, dst, jaccard)."""
-    return _edges_with_persisted(df, cfg)[0]
+    """Verified near-duplicate edge list (src, dst, jaccard).  The signed
+    frame feeds the pair and both verify joins; a returned lazy frame
+    cannot hand back a persisted one for unpersisting, so it is pinned
+    with a lazy localCheckpoint, which the context cleaner releases."""
+    s = signed(df, cfg).localCheckpoint(eager=False)
+    return verify_pairs(candidate_pairs(s, cfg), s, cfg)
 
 
 def run_pipeline(df: DataFrame, cfg: DedupConfig) -> DataFrame:

@@ -43,6 +43,7 @@ from ..operators.audio_dedup import (
     audio_signatures,
     audio_verify_pairs,
 )
+from ..operators.pairs import _verify_join
 from .ingest import (
     Axis,
     StreamIndex,
@@ -105,7 +106,7 @@ def _spec_match(a: Column, b: Column, spec_tol: float) -> tuple[Column, Column]:
     return -d, ok
 
 
-def _bucket_pairs(sigs: DataFrame, id_col: str, bucket_cap: int) -> DataFrame:
+def _sig_pairs(sigs: DataFrame, id_col: str, bucket_cap: int) -> DataFrame:
     fps = sigs.select(id_col, F.explode("keys").alias("key"))
     return audio_candidate_pairs(fps, id_col, bucket_cap)
 
@@ -121,17 +122,10 @@ def audio_sketch_edges(
     from the stored keys, spectral-distance verify on the stored profiles.
     Used by the rebuilds (audio and fused) — pass a MATERIALIZED `sigs` so
     the signature source is not re-scanned per self-join side."""
-
-    def side(name: str) -> DataFrame:
-        return sigs.select(
-            F.col(id_col).alias(name), F.struct("spec", "n_samples").alias("_" + name)
-        )
-
-    _, ok = _spec_match(F.col("_src"), F.col("_dst"), spec_tol)
+    side = sigs.select(id_col, F.struct("spec", "n_samples").alias("sk"))
+    _, ok = _spec_match(F.col("sk_a"), F.col("sk_b"), spec_tol)
     return (
-        _bucket_pairs(sigs, id_col, bucket_cap)
-        .join(side("src"), "src")
-        .join(side("dst"), "dst")
+        _verify_join(_sig_pairs(sigs, id_col, bucket_cap), side, id_col)
         .where(ok)
         .select("src", "dst")
     )
@@ -146,7 +140,7 @@ def audio_axis(
     """The sound axis (module docstring)."""
 
     def batch_edges(sigs: DataFrame, batch: DataFrame) -> DataFrame:
-        pairs = _bucket_pairs(sigs, id_col, bucket_cap)
+        pairs = _sig_pairs(sigs, id_col, bucket_cap)
         return audio_verify_pairs(batch, pairs, id_col, min_snr_db).select("src", "dst")
 
     return Axis(
