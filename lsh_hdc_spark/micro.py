@@ -20,10 +20,10 @@ keep the session conf unchanged — this is the same measured-size
 discipline ``operators/cc.py::connected_components`` applies to its star
 loop (there from the exact edge count; here from the only size signal that
 exists before the first action).  Small inputs run under a cloned session
-on the same SparkContext via the zero-copy ``_rebind`` handoff.
-``newSession()`` starts from the builder-time (SparkContext) conf only: a
-value the caller set at runtime with ``spark.conf.set`` is NOT inherited,
-except the partition count and ANSI flag set explicitly below.
+on the same SparkContext via the zero-copy ``_rebind`` handoff.  The
+clone (``session.clone_session``) carries the caller's runtime SQL conf —
+time zone, case sensitivity, ANSI, AQE — and differs only in its shuffle
+partition count.
 """
 
 from __future__ import annotations
@@ -31,6 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 from .operators.cc import _rebind
+from .session import clone_session
 
 #: estimated input bytes charged per initial shuffle partition.  Catalyst's
 #: estimate is file-size-based (compressed parquet scaled by projected
@@ -50,7 +51,9 @@ def micro_rebound(df: DataFrame) -> tuple[DataFrame, bool]:
 
     Callers that return lazy frames may hand the rebound session's frame
     straight back (results are partitioning-invariant); callers that must
-    compose with caller-session frames materialize and ``_rebind`` back.
+    compose with caller-session frames ``_rebind`` them back: work already
+    materialized (pins, CC's counted edges) is kept, and whatever is still
+    lazy re-plans under the caller's conf.
     """
     spark = df.sparkSession
     conf_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
@@ -61,10 +64,5 @@ def micro_rebound(df: DataFrame) -> tuple[DataFrame, bool]:
     parts = max(MICRO_MIN_PARTITIONS, -(-est // MICRO_BYTES_PER_PARTITION))
     if parts >= conf_parts:
         return df, False
-    sess = spark.newSession()
-    sess.conf.set("spark.sql.shuffle.partitions", str(parts))
-    # ANSI posture must match the caller (same contract as the CC loop)
-    sess.conf.set(
-        "spark.sql.ansi.enabled", spark.conf.get("spark.sql.ansi.enabled")
-    )
+    sess = clone_session(spark, {"spark.sql.shuffle.partitions": str(parts)})
     return _rebind(df, sess), True

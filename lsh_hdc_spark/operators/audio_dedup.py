@@ -34,8 +34,9 @@ they ride in the key for free discrimination (at 10^12 rows the length
 term alone splits the keyspace ~10^4 ways before the mask's 2^32).
 
 Scale shape (the 10^12-clip posture, mirroring PLANS.md §3 discipline):
-the binary column crosses exactly TWO scans — the fingerprint pass and
-one semi-join fetch of the DISTINCT candidate ids' bytes (pinned before
+the binary column crosses exactly TWO scans — the signature pass
+(audio_signatures, pinned once by the clustering core) and one semi-join
+fetch of the DISTINCT candidate ids' bytes (pinned before
 the two pair-join references, so neither join side re-scans the table);
 the bucket shuffle carries (clip_id, key) only; candidate pairs are
 generated per bucket under a size cap with a drop census (never
@@ -47,12 +48,12 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.audio import decode_clip, snr_db
 from ..functions.hashing import GOLDEN, as_i64, mix64
-from .cc import assign_clusters
+from ..plans.pipeline import Axis, _axis_edges, _cluster, text_axis
 from .pairs import _bucket_census, _bucket_pairs, _verify_join
 
 N_BANDS = 32
@@ -66,6 +67,9 @@ MARGIN_DB = 6.0
 MAX_PROBE_BANDS = 4
 #: buckets above this size are dropped from pair generation (with census)
 BUCKET_CAP = 512
+#: duplicate criterion for decoded-PCM pairs (SNR, dB) — the BASELINE.json
+#: per-row invariant threshold
+MIN_SNR_DB = 30.0
 
 
 def _power(pcm: np.ndarray) -> np.ndarray:
@@ -145,10 +149,11 @@ def audio_signatures(clips: DataFrame, id_col: str = "clip_id") -> DataFrame:
     row per clip: the multi-probe bucket keys (_mask_keys) plus the
     SPEC_BINS-bin spectral profile, in ONE Arrow pass over the byte column.
 
-    This is the audio twin of functions/sign.py::signed for the streaming
-    path: everything the incremental index needs to match and verify future
-    arrivals, with the payload bytes left behind (the index stores ~1 KB of
-    sketch per clip, never audio).  Derived from lsh_hdc/sign.py [M]-level
+    This is the audio twin of functions/sign.py::signed, the audio axis's
+    sign: its keys feed the batch bucket pairs, and the whole row is what
+    the streaming index needs to match and verify future arrivals, with
+    the payload bytes left behind (the index stores ~1 KB of sketch per
+    clip, never audio).  Derived from lsh_hdc/sign.py [M]-level
     semantics the same way the text signatures are."""
 
     def _sig(batches):
@@ -179,33 +184,6 @@ def audio_signatures(clips: DataFrame, id_col: str = "clip_id") -> DataFrame:
     )
 
 
-def audio_fingerprints(
-    clips: DataFrame, id_col: str = "clip_id"
-) -> DataFrame:
-    """(clip_id, key) — one row per emitted bucket key.  The one Arrow
-    pass over the byte column on the fingerprint side; everything
-    downstream of this frame shuffles ids and keys only."""
-
-    def _fp(batches):
-        for pdf in batches:
-            ids: list[str] = []
-            keys: list[np.ndarray] = []
-            for cid, pcm, sr in _decoded(pdf, id_col):
-                ks = _mask_keys(pcm, sr)
-                ids.extend([cid] * ks.size)
-                keys.append(ks)
-            flat = (
-                as_i64(np.concatenate(keys))
-                if keys
-                else np.empty(0, dtype=np.int64)
-            )
-            yield pd.DataFrame({id_col: ids, "key": flat})
-
-    return clips.select(id_col, "bytes", "sr_hz", "codec").mapInPandas(
-        _fp, f"{id_col} string, key long"
-    )
-
-
 def audio_candidate_pairs(
     fps: DataFrame, id_col: str = "clip_id", bucket_cap: int = BUCKET_CAP
 ) -> DataFrame:
@@ -229,7 +207,7 @@ def audio_verify_pairs(
     clips: DataFrame,
     pairs: DataFrame,
     id_col: str = "clip_id",
-    min_snr_db: float = 30.0,
+    min_snr_db: float = MIN_SNR_DB,
 ) -> DataFrame:
     """(src, dst, snr_db) edges whose decoded-PCM SNR clears the
     duplicate threshold.  The bytes of the DISTINCT candidate ids are
@@ -290,79 +268,155 @@ def audio_verify_pairs(
     return j.mapInPandas(_snr, "src string, dst string, snr_db double")
 
 
+#: new-vs-index duplicate criterion of the sketch paths: relative-L1
+#: distance between stored spectral profiles (see
+#: streaming/audio_ingest.py's module docstring for the calibration).
+SPEC_TOL = 0.01
+
+AUDIO_KEYS = ("keys", "key")
+
+
+def _spec_distance(a, b):
+    """Relative-L1 distance between two spectral-profile array columns,
+    entirely JVM-side (zip_with + aggregate — no Python in the verify)."""
+    l1 = F.aggregate(
+        F.zip_with(a, b, lambda x, y: F.abs(x - y)),
+        F.lit(0.0),
+        lambda acc, x: acc + x,
+    )
+    tot = F.greatest(
+        F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x),
+        F.aggregate(b, F.lit(0.0), lambda acc, x: acc + x),
+        F.lit(1e-300),
+    )
+    return l1 / tot
+
+
+def _spec_energized(a, b):
+    """Digital-silence guard (ADVICE r5): two all-zero profiles have
+    _spec_distance 0 via the denominator floor, so equal-length silent
+    clips would merge through every sketch path while the batch/in-batch
+    SNR criterion (-inf on zero signal power) never merges them.  Require
+    BOTH profiles to carry energy before a sketch distance may match —
+    silent clips stay singletons on the sketch paths, matching the SNR
+    verify's behavior."""
+    return (F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x) > 0) & (
+        F.aggregate(b, F.lit(0.0), lambda acc, x: acc + x) > 0
+    )
+
+
+def _spec_match(a: Column, b: Column, spec_tol: float) -> tuple[Column, Column]:
+    """(score, verified) for two (spec, n_samples) structs; the score is
+    the negated spectral distance, so the closest match scores highest."""
+    d = _spec_distance(a["spec"], b["spec"])
+    ok = (
+        (a["n_samples"] == b["n_samples"])
+        & _spec_energized(a["spec"], b["spec"])
+        & (d <= F.lit(spec_tol))
+    )
+    return -d, ok
+
+
+def _sig_pairs(sigs: DataFrame, id_col: str, bucket_cap: int) -> DataFrame:
+    fps = sigs.select(id_col, F.explode("keys").alias("key"))
+    return audio_candidate_pairs(fps, id_col, bucket_cap)
+
+
+def audio_sketch_edges(
+    sigs: DataFrame,
+    id_col: str = "clip_id",
+    bucket_cap: int = BUCKET_CAP,
+    spec_tol: float = SPEC_TOL,
+) -> DataFrame:
+    """(src, dst) duplicate edges over an acoustic-signature frame
+    (id, keys, spec, n_samples) WITHOUT touching audio bytes: bucket pairs
+    from the stored keys, spectral-distance verify on the stored profiles.
+    Used by the rebuilds (audio and fused) — pass a MATERIALIZED `sigs` so
+    the signature source is not re-scanned per self-join side."""
+    side = sigs.select(id_col, F.struct("spec", "n_samples").alias("sk"))
+    _, ok = _spec_match(F.col("sk_a"), F.col("sk_b"), spec_tol)
+    return (
+        _verify_join(_sig_pairs(sigs, id_col, bucket_cap), side, id_col)
+        .where(ok)
+        .select("src", "dst")
+    )
+
+
+def audio_axis(
+    id_col: str,
+    min_snr_db: float = MIN_SNR_DB,
+    bucket_cap: int = BUCKET_CAP,
+    spec_tol: float = SPEC_TOL,
+) -> Axis:
+    """The sound axis of the clustering core (plans/pipeline.py): signed by
+    audio_signatures; within a signed frame, bucket pairs from its keys
+    verified by decoded-PCM SNR (the bytes are in hand); over stored
+    signatures and in the index match, the spectral-profile verify."""
+
+    def batch_edges(sigs: DataFrame, batch: DataFrame) -> DataFrame:
+        pairs = _sig_pairs(sigs, id_col, bucket_cap)
+        return audio_verify_pairs(batch, pairs, id_col, min_snr_db)
+
+    return Axis(
+        sig_cols=("keys", "spec", "n_samples"),
+        keys=AUDIO_KEYS,
+        sign=lambda df: audio_signatures(df, id_col),
+        batch_edges=batch_edges,
+        sig_edges=lambda sigs: audio_sketch_edges(sigs, id_col, bucket_cap, spec_tol),
+        fetch=("spec", "n_samples"),
+        score=lambda n, i: _spec_match(n, i, spec_tol),
+    )
+
+
 def audio_dedup_edges(
     clips: DataFrame,
     id_col: str = "clip_id",
-    min_snr_db: float = 30.0,
+    min_snr_db: float = MIN_SNR_DB,
     bucket_cap: int = BUCKET_CAP,
 ) -> DataFrame:
-    """(src, dst, snr_db) verified audio near-dup edges — the audio-axis
-    twin of plans.pipeline.dedup_edges."""
-    from ..micro import micro_rebound
-
-    # dust-sized corpora run under a right-sized cloned session (micro.py)
-    clips, _ = micro_rebound(clips)
-    fps = audio_fingerprints(clips, id_col).localCheckpoint(eager=True)
-    pairs = audio_candidate_pairs(fps, id_col, bucket_cap)
-    return audio_verify_pairs(clips, pairs, id_col, min_snr_db)
+    """(src, dst, snr_db) verified audio near-dup edges — the audio axis's
+    edge half of the clustering core, the twin of
+    plans.pipeline.dedup_edges."""
+    return _axis_edges(clips, audio_axis(id_col, min_snr_db, bucket_cap))[1]
 
 
 def fused_dedup_clusters(
     clips: DataFrame,
     cfg=None,
-    min_snr_db: float = 30.0,
+    min_snr_db: float = MIN_SNR_DB,
     bucket_cap: int = BUCKET_CAP,
 ) -> DataFrame:
     """Cross-modal OR-fusion: a pair is a duplicate if the TRANSCRIPT
     pipeline (shingle/MinHash/LSH/Jaccard) verifies it OR the AUDIO
     pipeline (spectral fingerprint + SNR) does; one shared CC over the
-    union edge set labels clusters — the same OR-merge shape the text
-    pipeline uses for substring edges (plans/pipeline.py).
+    union edge set labels clusters — the clustering core
+    (plans/pipeline.py::_cluster) over the text and audio axes, the same
+    OR-merge the text pipeline uses for substring edges.
 
     This catches what either modality alone misses: re-voiced clips with
     identical transcripts (text edge, no audio edge) and re-transcribed /
     mis-transcribed clips with identical audio (audio edge, no text
-    edge).  Both union sides shuffle (src, dst) ids only."""
+    edge).  Both union sides shuffle (src, dst) ids only.  Labels follow
+    assign_clusters with min_support 1 and belong to `clips`' session."""
     from ..config import CLIPS
-    from ..micro import micro_rebound
-    from ..plans.pipeline import _edges_with_persisted
 
     cfg = cfg or CLIPS
-    # one micro session covers BOTH modalities' edge passes and the CC
-    clips, _ = micro_rebound(clips)
-    text_edges, s = _edges_with_persisted(clips, cfg)
-    audio_edges = audio_dedup_edges(clips, cfg.id_col, min_snr_db, bucket_cap)
-    edges = (
-        text_edges.select("src", "dst")
-        .unionByName(audio_edges.select("src", "dst"))
-        .distinct()
-    )
-    labels = assign_clusters(clips.select(cfg.id_col), edges, cfg.id_col)
-    s.unpersist()
-    return labels
+    axes = [text_axis(cfg), audio_axis(cfg.id_col, min_snr_db, bucket_cap)]
+    return _cluster(clips, cfg.id_col, axes)[0]
 
 
 def audio_dedup_clusters(
     clips: DataFrame,
     id_col: str = "clip_id",
-    min_snr_db: float = 30.0,
+    min_snr_db: float = MIN_SNR_DB,
     bucket_cap: int = BUCKET_CAP,
     min_support: int = 1,
 ) -> DataFrame:
     """(clip_id, cluster_id, cluster_size) — full audio-axis dedup:
-    fingerprint -> bucket pairs -> SNR verify -> connected components.
+    signatures -> bucket pairs -> SNR verify -> connected components, the
+    clustering core (plans/pipeline.py::_cluster) over the audio axis.
     Every input row is labeled; non-duplicates are singleton clusters of
-    themselves (the text pipeline's labeling convention)."""
-    from ..micro import micro_rebound
-
-    # dust-sized corpora run under a right-sized cloned session (micro.py)
-    clips, _ = micro_rebound(clips)
-    # materialize the fingerprints once: ids+keys only (tiny vs bytes);
-    # the candidate self-join and the census would otherwise re-run the
-    # byte-scanning Arrow pass per reference
-    fps = audio_fingerprints(clips, id_col).localCheckpoint(eager=True)
-    pairs = audio_candidate_pairs(fps, id_col, bucket_cap)
-    edges = audio_verify_pairs(clips, pairs, id_col, min_snr_db)
-    return assign_clusters(
-        clips.select(id_col), edges, id_col, min_support=min_support
-    )
+    themselves (the text pipeline's labeling convention); the labels
+    belong to `clips`' session."""
+    axis = audio_axis(id_col, min_snr_db, bucket_cap)
+    return _cluster(clips, id_col, [axis], min_support)[0]

@@ -45,6 +45,8 @@ import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..session import clone_session
+
 #: unique suffixes for the global-temp-view handoff between sessions (safe
 #: under concurrent connected_components calls on one SparkSession)
 _VIEW_SEQ = itertools.count()
@@ -229,12 +231,13 @@ def _star_components(e: DataFrame, n_edges: int, max_iter: int) -> DataFrame:
             -(-n_edges // _CC_ROWS_PER_PARTITION),
         ),
     )
-    loop = spark.newSession()
-    loop.conf.set("spark.sql.shuffle.partitions", str(loop_parts))
-    loop.conf.set("spark.sql.adaptive.enabled", "false")
-    # ANSI posture must match the caller (the loop is ANSI-safe either
-    # way, but plans should not silently change dialect mid-pipeline)
-    loop.conf.set("spark.sql.ansi.enabled", spark.conf.get("spark.sql.ansi.enabled"))
+    loop = clone_session(
+        spark,
+        {
+            "spark.sql.shuffle.partitions": str(loop_parts),
+            "spark.sql.adaptive.enabled": "false",
+        },
+    )
     pinned = [e]
     e = _rebind(e, loop)
     for _ in range(max_iter):
@@ -332,7 +335,8 @@ def connected_components(edges: DataFrame, max_iter: int = 30) -> DataFrame:
       edges, the numpy working set and the broadcast labels within a
       default 1g driver heap.
     * above it, the large-star/small-star loop runs in a CLONED SparkSession
-      (same SparkContext, own SQLConf) whose shuffle-partition count is
+      (same SparkContext, a copy of the caller's runtime SQLConf —
+      ``session.clone_session``) whose shuffle-partition count is
       sized to the measured edge count (see _CC_ROWS_PER_PARTITION) and
       whose AQE is off (each AQE shuffle-stage materialization is an extra
       serial driver job — O(log n) rounds x 2+ shuffles of pure overhead on

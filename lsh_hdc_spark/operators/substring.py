@@ -307,7 +307,7 @@ def substring_pairs(
     # the winnowing Arrow pass over every document runs once, not once per
     # join side (measured 0.85 s/pass at sf0.1).  ~115 B/row (id, pos, fp,
     # two windows); at corpus scale this is the frame production spills to
-    # a temp table, the audio path's audio_fingerprints discipline.
+    # a temp table, as the audio path's pinned signatures.
     from ..micro import micro_rebound
 
     # dust-sized corpora run the whole pass under a right-sized cloned

@@ -1,4 +1,5 @@
-"""End-to-end near-duplicate clustering pipeline (op 14).
+"""End-to-end near-duplicate clustering pipeline (op 14), and the one
+clustering core every batch and streaming entry calls.
 
 Reference semantics: ``lsh_hdc/cluster.py::HDClustering.clusters_from_iter``
 wires normalize→shingle→sign→band→bucket→sketch/Jaccard-filter→union-find
@@ -13,6 +14,29 @@ DataFrame plan:
             star joins
          -> [one join] labels -> rollup
 
+The wiring is written once, in ``_cluster``, over a list of ``Axis``
+values.  An axis is what one modality contributes: how a frame is signed,
+its signature and key columns, its verified edges within a signed frame
+and over stored signatures, and its index-match verify.  ``text_axis`` is
+the transcript axis above; ``operators/audio_dedup.py::audio_axis`` is
+the sound axis.  ``_cluster`` right-sizes the session once
+(``micro_rebound``), signs and pins each axis once, unions the axes' edges
+(plus optional extra edges, e.g. substring pairs) into one
+``assign_clusters`` call, and returns the labels and the pinned
+signatures in the caller's session.  Its callers:
+
+    run_pipeline / run_pipeline_clips   text axis (+ substring edges)
+    audio_dedup_clusters                audio axis
+    fused_dedup_clusters                text + audio axes
+    streaming attach (in-batch pass)    the stream's axes
+    streaming seed_*                    as the batch entry, and writes the
+                                        returned signatures to the index
+
+``dedup_edges`` and ``audio_dedup_edges`` are its edge half for one axis
+(``_axis_edges``: sign, pin, verified edges; no sizing, no CC).  Fusing
+modalities is only a longer axis list: the union of their edges feeds the
+one CC.
+
 Heavy payload columns (clips.bytes) never enter the plan — only
 (id, text) are read (column pruning pushes this into the parquet scan);
 the final output re-joins payload by id if the caller asks.
@@ -20,35 +44,147 @@ the final output re-joins payload by id if the caller asks.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from dataclasses import dataclass
+from functools import reduce
+from typing import Callable
+
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
 from ..config import DedupConfig
 from ..functions.sign import signed
 from ..micro import micro_rebound
 from ..operators.cc import _rebind, assign_clusters
 from ..operators.pairs import band_key_rows, bucket_stats, candidate_pairs, verify_pairs
+from ..operators.substring import substring_pairs
 
 
-def _edges_with_persisted(
-    df: DataFrame, cfg: DedupConfig
-) -> tuple[DataFrame, DataFrame]:
-    """(edges, persisted signed frame) — the caller owns the unpersist;
-    the signed frame is read twice by the verify joins, so it must stay
-    pinned until the edge frame is materialized."""
-    s = signed(df, cfg).persist(StorageLevel.MEMORY_AND_DISK)
-    pairs = candidate_pairs(s, cfg)
-    return verify_pairs(pairs, s, cfg), s
+@dataclass(frozen=True)
+class Axis:
+    """What one modality contributes to the clustering core and to the
+    streaming attach/seed/rebuild core."""
+
+    #: signature columns stored in an index's sig_dir, after the id
+    sig_cols: tuple[str, ...]
+    #: (key-array column in sig_dir, its exploded column in keys_dir)
+    keys: tuple[str, str]
+    #: frame -> (id, *sig_cols, ...), one row per signable row
+    sign: Callable[[DataFrame], DataFrame]
+    #: (signed frame, frame) -> verified (src, dst, ...) edges
+    batch_edges: Callable[[DataFrame, DataFrame], DataFrame]
+    #: stored signatures -> verified (src, dst, ...) edges, for the rebuild
+    sig_edges: Callable[[DataFrame], DataFrame]
+    #: columns the index match fetches per candidate pair, as one struct
+    fetch: tuple[str, ...]
+    #: (new struct, indexed struct) -> (score, verified); higher is better
+    score: Callable[[Column, Column], tuple[Column, Column]]
+
+
+TEXT_KEYS = ("band_keys", "band_key")
+
+
+def text_axis(cfg: DedupConfig) -> Axis:
+    """The transcript axis: shingle/MinHash band keys, exact-Jaccard
+    verify on the shingles (the batch pipeline's pair path, in-batch and
+    on the stored signatures alike)."""
+
+    def edges(sigs: DataFrame, batch: DataFrame | None = None) -> DataFrame:
+        return verify_pairs(candidate_pairs(sigs, cfg), sigs, cfg)
+
+    def jaccard(n: Column, i: Column) -> tuple[Column, Column]:
+        a = F.array_distinct(n["shingles_h"])
+        b = F.array_distinct(i["shingles_h"])
+        inter = F.size(F.array_intersect(a, b))
+        union = F.size(a) + F.size(b) - inter
+        jac = inter.cast("double") / F.greatest(union, F.lit(1)).cast("double")
+        return jac, jac >= F.lit(cfg.resolved_jaccard_threshold)
+
+    return Axis(
+        sig_cols=("shingles_h", "sketch", "band_keys"),
+        keys=TEXT_KEYS,
+        sign=lambda df: signed(df, cfg),
+        batch_edges=edges,
+        sig_edges=edges,
+        fetch=("shingles_h",),
+        score=jaccard,
+    )
+
+
+def _union(frames: list[DataFrame]) -> DataFrame:
+    """unionByName over the axes' frames, deduplicated when more than one
+    axis contributes (a pair can verify, an id be signed, on both): CC's
+    local-finish bound counts edges, so a pair both axes verify must not
+    count twice."""
+    out = reduce(DataFrame.unionByName, frames)
+    return out.distinct() if len(frames) > 1 else out
+
+
+def _axis_edges(df: DataFrame, ax: Axis) -> tuple[DataFrame, DataFrame]:
+    """(pinned signatures, verified edges) of one axis over `df` — the
+    edge half of ``_cluster``.  The signatures feed the pair self-join and
+    the verify fetches (and, for the streaming callers, the index match and
+    append), so they are pinned; the pin is a lazy localCheckpoint, which
+    the first action materializes and the context cleaner releases."""
+    sigs = ax.sign(df).localCheckpoint(eager=False)
+    return sigs, ax.batch_edges(sigs, df)
+
+
+def _cluster(
+    df: DataFrame,
+    id_col: str,
+    axes: list[Axis],
+    min_support: int = 1,
+    extra_edges: Callable[[DataFrame], DataFrame] | None = None,
+) -> tuple[DataFrame, list[DataFrame]]:
+    """(labels, [pinned signatures per axis]) — labels is (id_col,
+    cluster_id, cluster_size) for every row of `df` (``assign_clusters``
+    semantics), over the union of every axis's verified edges and
+    `extra_edges(df)`.
+
+    Dust-sized inputs run the whole sign -> pairs -> verify -> CC chain
+    under a right-sized cloned session (``micro_rebound``): the chain is
+    ~10 exchanges of id-sized rows, so at micro scale its wall clock is
+    per-task fixed cost times the partition count, not data.  CC
+    materializes the edges (and with them every pinned signature) inside
+    that session; the labels and signatures are then handed back to the
+    caller's session zero-copy (``cc._rebind``), so no caller sees a
+    foreign-session frame."""
+    caller = df.sparkSession
+    df, micro = micro_rebound(df)
+    sigs, edges = zip(*(_axis_edges(df, ax) for ax in axes))
+    edges = _union([e.select("src", "dst") for e in edges])
+    if extra_edges is not None:
+        edges = edges.unionByName(extra_edges(df).select("src", "dst"))
+    labels = assign_clusters(df, edges, id_col, min_support)
+    if micro:
+        return _rebind(labels, caller), [_rebind(s, caller) for s in sigs]
+    return labels, list(sigs)
 
 
 def dedup_edges(df: DataFrame, cfg: DedupConfig) -> DataFrame:
-    """Verified near-duplicate edge list (src, dst, jaccard).  The signed
-    frame feeds the pair and both verify joins; a returned lazy frame
-    cannot hand back a persisted one for unpersisting, so it is pinned
-    with a lazy localCheckpoint, which the context cleaner releases."""
-    s = signed(df, cfg).localCheckpoint(eager=False)
-    return verify_pairs(candidate_pairs(s, cfg), s, cfg)
+    """Verified near-duplicate edge list (src, dst, jaccard): the text
+    axis's edge half of the clustering core (``_axis_edges``).  The signed
+    frame feeds the pair and both verify joins through a lazy
+    localCheckpoint, which the context cleaner releases."""
+    return _axis_edges(df, text_axis(cfg))[1]
+
+
+def _text_cluster(
+    df: DataFrame, cfg: DedupConfig
+) -> tuple[DataFrame, list[DataFrame]]:
+    """run_pipeline's labels, and the core's text signatures (of the rows
+    that pass cfg.content_filter)."""
+    base = df.filter(F.expr(cfg.content_filter)) if cfg.content_filter else df
+    extra = (
+        (lambda b: substring_pairs(b, cfg.id_col, cfg.text_col, cfg.substring_min_len))
+        if cfg.substring_min_len
+        else None
+    )
+    labels, sigs = _cluster(base, cfg.id_col, [text_axis(cfg)], cfg.min_support, extra)
+    if cfg.content_filter:
+        # excluded rows are part of the OUTPUT but not of any cluster
+        labels = df.select(cfg.id_col).join(labels, cfg.id_col, "left")
+    return labels, sigs
 
 
 def run_pipeline(df: DataFrame, cfg: DedupConfig) -> DataFrame:
@@ -63,47 +199,10 @@ def run_pipeline(df: DataFrame, cfg: DedupConfig) -> DataFrame:
     are OR-merged into the edge list before clustering.  When
     cfg.content_filter is set (op 15), rows failing the predicate never
     reach signing (the filter is pushed into the scan by Catalyst) and
-    come back with NULL cluster_id/cluster_size.
+    come back with NULL cluster_id/cluster_size.  The text axis of the
+    clustering core (``_cluster``); the labels belong to `df`'s session.
     """
-    return _labels_with_state(df, cfg)[0]
-
-
-def _labels_with_state(df: DataFrame, cfg: DedupConfig) -> tuple[DataFrame, bool]:
-    """Core of run_pipeline: (labels, materialized?).
-
-    Dust-sized inputs run the whole sign -> pairs -> verify -> CC -> label
-    chain under a right-sized cloned session (micro_rebound): the chain is
-    ~10 exchanges of id-sized rows, so at micro scale its wall clock is
-    per-task fixed cost times the partition count, not data.  The labels
-    are then materialized under that sizing and handed back to the
-    caller's session zero-copy (the same checkpoint+_rebind handoff CC
-    itself uses); `materialized` tells callers the frame is already
-    checkpoint-backed so they can skip their own pin-and-count pass.
-    """
-    caller = df.sparkSession
-    base = df.filter(F.expr(cfg.content_filter)) if cfg.content_filter else df
-    base, micro = micro_rebound(base)
-    edges, s = _edges_with_persisted(base, cfg)
-    edges = edges.select("src", "dst")
-    if cfg.substring_min_len:
-        from ..operators.substring import substring_pairs
-
-        sub = substring_pairs(
-            base, cfg.id_col, cfg.text_col, min_len=cfg.substring_min_len
-        ).select("src", "dst")
-        edges = edges.unionByName(sub)
-    # assign_clusters materializes the edge frame (CC's eager checkpoint),
-    # after which the label plan references only checkpoint blocks — the
-    # pinned signed frame can be released instead of living for the session
-    labels = assign_clusters(base, edges, cfg.id_col, cfg.min_support)
-    s.unpersist()
-    if micro:
-        labels = _rebind(labels.localCheckpoint(eager=True), caller)
-    if cfg.content_filter:
-        # excluded rows are part of the OUTPUT but not of any cluster
-        labels = df.select(cfg.id_col).join(labels, cfg.id_col, "left")
-        return labels, False
-    return labels, micro
+    return _text_cluster(df, cfg)[0]
 
 
 #: salt fanout for the two-phase member cap — a degenerate mega-cluster is
@@ -187,17 +286,12 @@ def run_pipeline_clips(
     from ..config import CLIPS
 
     cfg = cfg or CLIPS
-    labels, materialized = _labels_with_state(
-        df.select(cfg.id_col, cfg.text_col), cfg
-    )
+    labels = run_pipeline(df.select(cfg.id_col, cfg.text_col), cfg)
     if broadcast_label_rows:
         # one row per input id, already computed once here; lazy checkpoint
         # + count materializes the blocks and sizes them in one pass (the
-        # AQE stages execute at the localCheckpoint call either way).  The
-        # micro path hands the frame back already checkpoint-backed, so
-        # only the count remains.
-        if not materialized:
-            labels = labels.localCheckpoint(eager=False)
+        # AQE stages execute at the localCheckpoint call either way)
+        labels = labels.localCheckpoint(eager=False)
         if labels.count() <= broadcast_label_rows:
             labels = F.broadcast(labels)
     return df.join(labels, cfg.id_col)

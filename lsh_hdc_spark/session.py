@@ -74,3 +74,20 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def clone_session(parent: SparkSession, overrides: dict[str, str]) -> SparkSession:
+    """A new session on `parent`'s SparkContext with `parent`'s runtime SQL
+    conf, then `overrides` on top.
+
+    ``newSession()`` alone starts from the builder-time conf, so a value the
+    caller set with ``spark.conf.set`` (time zone, case sensitivity, AQE
+    toggles) would silently revert inside the clone; every modifiable key
+    of the parent's conf is copied first."""
+    sess = parent.newSession()
+    for k, v in parent.conf.getAll.items():
+        if parent.conf.isModifiable(k):
+            sess.conf.set(k, v)
+    for k, v in overrides.items():
+        sess.conf.set(k, v)
+    return sess

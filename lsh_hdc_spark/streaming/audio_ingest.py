@@ -1,9 +1,10 @@
 """Structured-Streaming incremental dedup on the AUDIO axis — the payload
-twin of ingest.py's text axis (graft cell: pyspark x audio, BASELINE.json).
+twin of the text axis (graft cell: pyspark x audio, BASELINE.json).
 
 New arrivals attach by SOUND through the shared core in ingest.py (index
 layout, greedy adopt, leases, crash-safe swap); what is specific to this
-axis is:
+axis (operators/audio_dedup.py::audio_axis, which the batch entries share)
+is:
 
     sign            audio_signatures — ONE Arrow pass over the batch's byte
                     column: multi-probe bucket keys + SPEC_BINS spectral
@@ -34,124 +35,18 @@ on the synth corpus, duplicate families <= 0.0018 — a 5x/60x margin).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame, SparkSession
 
-from ..operators.audio_dedup import (
+from ..operators.audio_dedup import (  # noqa: F401  (audio_sketch_edges: re-exported)
+    AUDIO_KEYS,
     BUCKET_CAP,
-    audio_candidate_pairs,
-    audio_signatures,
-    audio_verify_pairs,
+    MIN_SNR_DB,
+    SPEC_TOL,
+    audio_axis,
+    audio_sketch_edges,
 )
-from ..operators.pairs import _verify_join
-from .ingest import (
-    Axis,
-    StreamIndex,
-    _attach,
-    _rebuild,
-    _run_stream,
-    _seed,
-    _write_sig_epoch,
-)
-
-#: new-vs-index duplicate criterion: relative-L1 distance between stored
-#: spectral profiles (see module docstring for the calibration).
-SPEC_TOL = 0.01
-
-#: default duplicate criterion for in-batch pairs (decoded-PCM SNR, dB) —
-#: the BASELINE.json per-row invariant threshold, same as the batch path.
-MIN_SNR_DB = 30.0
-
-AUDIO_KEYS = ("keys", "key")
-
-
-def _spec_distance(a, b):
-    """Relative-L1 distance between two spectral-profile array columns,
-    entirely JVM-side (zip_with + aggregate — no Python in the verify)."""
-    l1 = F.aggregate(
-        F.zip_with(a, b, lambda x, y: F.abs(x - y)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    tot = F.greatest(
-        F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x),
-        F.aggregate(b, F.lit(0.0), lambda acc, x: acc + x),
-        F.lit(1e-300),
-    )
-    return l1 / tot
-
-
-def _spec_energized(a, b):
-    """Digital-silence guard (ADVICE r5): two all-zero profiles have
-    _spec_distance 0 via the denominator floor, so equal-length silent
-    clips would merge through every sketch path while the batch/in-batch
-    SNR criterion (-inf on zero signal power) never merges them.  Require
-    BOTH profiles to carry energy before a sketch distance may match —
-    silent clips stay singletons on the sketch paths, matching the SNR
-    verify's behavior."""
-    return (F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x) > 0) & (
-        F.aggregate(b, F.lit(0.0), lambda acc, x: acc + x) > 0
-    )
-
-
-def _spec_match(a: Column, b: Column, spec_tol: float) -> tuple[Column, Column]:
-    """(score, verified) for two (spec, n_samples) structs; the score is
-    the negated spectral distance, so the closest match scores highest."""
-    d = _spec_distance(a["spec"], b["spec"])
-    ok = (
-        (a["n_samples"] == b["n_samples"])
-        & _spec_energized(a["spec"], b["spec"])
-        & (d <= F.lit(spec_tol))
-    )
-    return -d, ok
-
-
-def _sig_pairs(sigs: DataFrame, id_col: str, bucket_cap: int) -> DataFrame:
-    fps = sigs.select(id_col, F.explode("keys").alias("key"))
-    return audio_candidate_pairs(fps, id_col, bucket_cap)
-
-
-def audio_sketch_edges(
-    sigs: DataFrame,
-    id_col: str = "clip_id",
-    bucket_cap: int = BUCKET_CAP,
-    spec_tol: float = SPEC_TOL,
-) -> DataFrame:
-    """(src, dst) duplicate edges over an acoustic-signature frame
-    (id, keys, spec, n_samples) WITHOUT touching audio bytes: bucket pairs
-    from the stored keys, spectral-distance verify on the stored profiles.
-    Used by the rebuilds (audio and fused) — pass a MATERIALIZED `sigs` so
-    the signature source is not re-scanned per self-join side."""
-    side = sigs.select(id_col, F.struct("spec", "n_samples").alias("sk"))
-    _, ok = _spec_match(F.col("sk_a"), F.col("sk_b"), spec_tol)
-    return (
-        _verify_join(_sig_pairs(sigs, id_col, bucket_cap), side, id_col)
-        .where(ok)
-        .select("src", "dst")
-    )
-
-
-def audio_axis(
-    id_col: str,
-    min_snr_db: float = MIN_SNR_DB,
-    bucket_cap: int = BUCKET_CAP,
-    spec_tol: float = SPEC_TOL,
-) -> Axis:
-    """The sound axis (module docstring)."""
-
-    def batch_edges(sigs: DataFrame, batch: DataFrame) -> DataFrame:
-        pairs = _sig_pairs(sigs, id_col, bucket_cap)
-        return audio_verify_pairs(batch, pairs, id_col, min_snr_db).select("src", "dst")
-
-    return Axis(
-        sig_cols=("keys", "spec", "n_samples"),
-        keys=AUDIO_KEYS,
-        sign=lambda df: audio_signatures(df, id_col),
-        batch_edges=batch_edges,
-        sig_edges=lambda sigs: audio_sketch_edges(sigs, id_col, bucket_cap, spec_tol),
-        fetch=("spec", "n_samples"),
-        score=lambda n, i: _spec_match(n, i, spec_tol),
-    )
+from ..plans.pipeline import _cluster
+from .ingest import StreamIndex, _attach, _rebuild, _run_stream, _seed, _write_sig_epoch
 
 
 def write_audio_epoch(
@@ -171,17 +66,15 @@ def seed_audio_index(
     min_snr_db: float = MIN_SNR_DB,
     bucket_cap: int = BUCKET_CAP,
 ) -> DataFrame:
-    """Cluster a base corpus with the BATCH audio pipeline
-    (operators/audio_dedup.py) and lay down the full sketch-index layout
-    (epoch = SEED_EPOCH) — the batch -> streaming migration path.  Returns
-    the labels."""
-    from ..operators.audio_dedup import audio_dedup_clusters
-
-    labels = audio_dedup_clusters(clips, id_col, min_snr_db, bucket_cap).select(
-        id_col, "cluster_id"
-    )
+    """Cluster a base corpus with the BATCH audio pipeline (the clustering
+    core over the audio axis, as operators/audio_dedup.py::
+    audio_dedup_clusters) and lay down the full sketch-index layout
+    (epoch = SEED_EPOCH) from the core's signatures, so every clip is
+    signed once — the batch -> streaming migration path.  Returns the
+    labels."""
     axis = audio_axis(id_col, min_snr_db, bucket_cap)
-    return _seed(clips, labels, id_col, [(axis, index)])
+    labels, sigs = _cluster(clips, id_col, [axis])
+    return _seed(labels.select(id_col, "cluster_id"), sigs, id_col, [(axis, index)])
 
 
 def attach_audio_batch(

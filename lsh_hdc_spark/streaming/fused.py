@@ -26,15 +26,15 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 
 from ..config import DedupConfig
-from ..operators.audio_dedup import BUCKET_CAP
-from .audio_ingest import MIN_SNR_DB, SPEC_TOL, audio_axis, write_audio_epoch
+from ..operators.audio_dedup import BUCKET_CAP, MIN_SNR_DB, SPEC_TOL, audio_axis
+from ..plans.pipeline import _cluster, text_axis
+from .audio_ingest import write_audio_epoch
 from .ingest import (
     StreamIndex,
     _attach,
     _rebuild,
     _run_stream,
     _seed,
-    text_axis,
     write_index_epoch,
 )
 
@@ -96,16 +96,15 @@ def seed_fused_index(
     min_snr_db: float = MIN_SNR_DB,
     bucket_cap: int = BUCKET_CAP,
 ) -> DataFrame:
-    """Cluster a base corpus with the BATCH cross-modal pipeline
-    (operators/audio_dedup.py::fused_dedup_clusters) and lay down both
-    sub-index layouts plus the shared labels sink (epoch = SEED_EPOCH) —
-    the batch -> streaming migration path.  Returns the labels."""
-    from ..operators.audio_dedup import fused_dedup_clusters
-
-    labels = fused_dedup_clusters(clips, cfg, min_snr_db, bucket_cap).select(
-        cfg.id_col, "cluster_id"
-    )
-    return _seed(clips, labels, cfg.id_col, _parts(cfg, index, min_snr_db, bucket_cap))
+    """Cluster a base corpus with the BATCH cross-modal pipeline (the
+    clustering core over the text and audio axes, as
+    operators/audio_dedup.py::fused_dedup_clusters) and lay down both
+    sub-index layouts plus the shared labels sink (epoch = SEED_EPOCH)
+    from the core's signatures, so each axis signs the corpus once — the
+    batch -> streaming migration path.  Returns the labels."""
+    parts = _parts(cfg, index, min_snr_db, bucket_cap)
+    labels, sigs = _cluster(clips, cfg.id_col, [ax for ax, _ in parts])
+    return _seed(labels.select(cfg.id_col, "cluster_id"), sigs, cfg.id_col, parts)
 
 
 def attach_fused_batch(

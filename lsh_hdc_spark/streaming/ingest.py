@@ -3,15 +3,16 @@
 The batch pipeline (plans/pipeline.py) rebuilds clusters from scratch; this
 module handles the production steady state instead: a corpus has already
 been clustered, and new items arrive continuously.  They attach by
-transcript (this module's text axis), by sound (audio_ingest.py's audio
-axis) or by both (fused.py).  One core here serves all three: it is
-parametrised over a list of ``Axis`` values, each holding what is specific
+transcript (the text axis), by sound (the audio axis) or by both
+(fused.py).  One core here serves all three: it is parametrised over a
+list of ``Axis`` values (plans/pipeline.py), each holding what is specific
 to its modality (how a batch is signed, its signature and key columns,
 its in-batch and stored-signature edges, its match verify).  Each
 micro-batch is
 
-    sign per axis (stateless mapInPandas — streaming-safe)
-      -> in-batch candidate pairs + verify per axis, UNION -> one CC
+    the batch clustering core (plans/pipeline.py::_cluster): sign and pin
+      per axis (stateless mapInPandas — streaming-safe), in-batch
+      candidate pairs + verify per axis, UNION -> one CC
          (novel dup groups arriving together co-cluster immediately)
       -> per axis: key stream-static join against the pre-exploded KEY
          index (ids only — no arrays cross this shuffle)
@@ -87,16 +88,14 @@ import os
 import shutil
 from dataclasses import dataclass
 from functools import partial, reduce
-from typing import Callable
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..config import DedupConfig
-from ..functions.sign import signed
 from ..micro import micro_rebound
-from ..operators.cc import _rebind, assign_clusters
-from ..operators.pairs import candidate_pairs, verify_pairs
+from ..operators.cc import assign_clusters
+from ..plans.pipeline import TEXT_KEYS, Axis, _cluster, _text_cluster, _union, text_axis
 
 #: key hash-partition fanout for keys_dir (plain-parquet stand-in for
 #: Iceberg bucket(N, key)).  64 keeps directory counts sane at sandbox
@@ -142,56 +141,6 @@ class StreamIndex:
 
     def read_labels(self, spark: SparkSession) -> DataFrame:
         return spark.read.parquet(self.labels_dir)
-
-
-@dataclass(frozen=True)
-class Axis:
-    """What one modality contributes to the attach/seed/rebuild core."""
-
-    #: signature columns stored in sig_dir, after the id
-    sig_cols: tuple[str, ...]
-    #: (key-array column in sig_dir, its exploded column in keys_dir)
-    keys: tuple[str, str]
-    #: batch -> (id, *sig_cols, ...), one row per signable batch row
-    sign: Callable[[DataFrame], DataFrame]
-    #: (signed batch, batch) -> verified in-batch (src, dst) edges
-    batch_edges: Callable[[DataFrame, DataFrame], DataFrame]
-    #: stored signatures -> verified (src, dst) edges, for the rebuild
-    sig_edges: Callable[[DataFrame], DataFrame]
-    #: columns the index match fetches per candidate pair, as one struct
-    fetch: tuple[str, ...]
-    #: (new struct, indexed struct) -> (score, verified); higher is better
-    score: Callable[[Column, Column], tuple[Column, Column]]
-
-
-TEXT_KEYS = ("band_keys", "band_key")
-
-
-def text_axis(cfg: DedupConfig) -> Axis:
-    """The transcript axis: shingle/MinHash band keys, exact-Jaccard
-    verify on the shingles (the batch pipeline's pair path, in-batch and
-    on the stored signatures alike)."""
-
-    def edges(sigs: DataFrame, batch: DataFrame | None = None) -> DataFrame:
-        return verify_pairs(candidate_pairs(sigs, cfg), sigs, cfg).select("src", "dst")
-
-    def jaccard(n: Column, i: Column) -> tuple[Column, Column]:
-        a = F.array_distinct(n["shingles_h"])
-        b = F.array_distinct(i["shingles_h"])
-        inter = F.size(F.array_intersect(a, b))
-        union = F.size(a) + F.size(b) - inter
-        jac = inter.cast("double") / F.greatest(union, F.lit(1)).cast("double")
-        return jac, jac >= F.lit(cfg.resolved_jaccard_threshold)
-
-    return Axis(
-        sig_cols=("shingles_h", "sketch", "band_keys"),
-        keys=TEXT_KEYS,
-        sign=lambda df: signed(df, cfg),
-        batch_edges=edges,
-        sig_edges=edges,
-        fetch=("shingles_h",),
-        score=jaccard,
-    )
 
 
 def _write_epoch(df: DataFrame, path: str, epoch: int, parts: list[str]) -> None:
@@ -243,20 +192,17 @@ def write_index_epoch(
 Parts = list[tuple[Axis, StreamIndex]]
 
 
-def _union(frames: list[DataFrame]) -> DataFrame:
-    """unionByName over the axes' frames, deduplicated when more than one
-    axis contributes (a pair can verify, an id be signed, on both)."""
-    out = reduce(DataFrame.unionByName, frames)
-    return out.distinct() if len(frames) > 1 else out
-
-
-def _seed(df: DataFrame, labels: DataFrame, id_col: str, parts: Parts) -> DataFrame:
+def _seed(
+    labels: DataFrame, sigs: list[DataFrame], id_col: str, parts: Parts
+) -> DataFrame:
     """Lay down the full index layout for a batch-clustered base corpus
-    (epoch = SEED_EPOCH) from its `labels`; returns them materialized."""
+    (epoch = SEED_EPOCH) from its `labels` and the clustering core's
+    signatures (one per axis, so nothing is signed twice); returns the
+    labels materialized."""
     labels = labels.localCheckpoint(eager=True)
     ids = labels.select(id_col, "cluster_id")
-    for ax, ix in parts:
-        rows = ax.sign(df).join(ids, id_col).select(id_col, *ax.sig_cols, "cluster_id")
+    for (ax, ix), s in zip(parts, sigs):
+        rows = s.join(ids, id_col).select(id_col, *ax.sig_cols, "cluster_id")
         _write_sig_epoch(rows, ix, id_col, SEED_EPOCH, ax.keys)
     _write_epoch(ids, parts[0][1].labels_dir, SEED_EPOCH, ["epoch"])
     return labels
@@ -265,11 +211,13 @@ def _seed(df: DataFrame, labels: DataFrame, id_col: str, parts: Parts) -> DataFr
 def seed_index(
     spark: SparkSession, df: DataFrame, cfg: DedupConfig, index: StreamIndex
 ) -> DataFrame:
-    """Cluster a base corpus with the batch pipeline and lay down the full
-    index layout (epoch = SEED_EPOCH).  Returns the labels."""
-    from ..plans.pipeline import run_pipeline
-
-    return _seed(df, run_pipeline(df, cfg), cfg.id_col, [(text_axis(cfg), index)])
+    """Cluster a base corpus with the batch pipeline (run_pipeline's
+    labels, from the clustering core) and lay down the full index layout
+    (epoch = SEED_EPOCH) from the core's signatures.  Returns the labels.
+    With cfg.content_filter set, the excluded rows get label rows (NULL
+    cluster_id) but no signature or key rows: they were never signed."""
+    labels, sigs = _text_cluster(df, cfg)
+    return _seed(labels, sigs, cfg.id_col, [(text_axis(cfg), index)])
 
 
 def _best_match(
@@ -353,33 +301,16 @@ def _attach(
 ) -> tuple[DataFrame, list[DataFrame]]:
     """One micro-batch over the given axes: (labels, [new index rows per
     axis]) — labels is (id, cluster_id) for every batch row, each rows
-    frame is that axis's signatures with the final labels."""
-    caller = batch.sparkSession
-    # localCheckpoint (not persist): a signed frame is read by the verify
-    # joins, the index match, and the index append; eager materialization
-    # computes it once and the blocks are released by the context cleaner
-    # when the batch's frames go out of scope — no per-batch unpersist
-    # bookkeeping to leak across a long-running stream
-    first = parts[0][0].sign(batch).localCheckpoint(eager=True)
-    # a micro-batch is dust relative to the stream session's deployment-
-    # sized shuffle conf — right-size the per-batch work (micro.py; the
-    # checkpointed frame carries its upstream size estimate, and an
-    # estimate-free source falls back to the session untouched).  The
-    # batch and every axis's signatures share that session; the returned
-    # frames are handed back to the caller's session below, so the sinks
-    # and the foreachBatch contract see nothing micro.
-    first, micro = micro_rebound(first)
-    spark = first.sparkSession
-    if micro:
-        batch = _rebind(batch, spark)
-    sigs = [first] + [ax.sign(batch).localCheckpoint(eager=True) for ax, _ in parts[1:]]
-
+    frame is that axis's signatures with the final labels.  The clustering
+    core right-sizes its own sign -> edges -> CC chain and hands its
+    frames back, so the index match, the append rows and every returned
+    frame belong to the batch's session."""
     # in-batch clustering over every row of the batch (an audio clip that
-    # does not decode has no signature row but still gets a label)
-    edges = _union([ax.batch_edges(s, batch) for (ax, _), s in zip(parts, sigs)])
-    local = assign_clusters(batch.select(id_col), edges, id_col).select(
-        id_col, F.col("cluster_id").alias("local_cluster")
-    )
+    # does not decode has no signature row but still gets a label); the
+    # core signs and pins each axis once, and its signatures serve the
+    # index match and the index append below
+    local, sigs = _cluster(batch, id_col, [ax for ax, _ in parts])
+    local = local.select(id_col, F.col("cluster_id").alias("local_cluster"))
     matches = [
         _best_match(s, ix, ax, id_col)
         for (ax, ix), s in zip(parts, sigs)
@@ -396,9 +327,6 @@ def _attach(
         s.join(labels, id_col).select(id_col, *ax.sig_cols, "cluster_id")
         for (ax, _), s in zip(parts, sigs)
     ]
-    if micro:
-        labels = _rebind(labels, caller)
-        rows = [_rebind(r, caller) for r in rows]
     return labels, rows
 
 
@@ -622,7 +550,9 @@ def _rebuild(spark: SparkSession, id_col: str, parts: Parts) -> None:
             ix.read_sigs(spark).select(id_col, *ax.sig_cols).localCheckpoint(eager=True)
             for ax, ix in rest
         ]
-        edges = _union([ax.sig_edges(s) for (ax, _), s in zip(parts, sigs)])
+        edges = _union(
+            [ax.sig_edges(s).select("src", "dst") for (ax, _), s in zip(parts, sigs)]
+        )
         # the CC vertex set is the UNION of the sig tables' ids: an id
         # signed on only one axis (undecodable audio keeps it out of the
         # audio table) must still be a vertex, or its edges on the other

@@ -18,10 +18,15 @@ from lsh_hdc_spark.operators.audio_dedup import (
     audio_bucket_census,
     audio_candidate_pairs,
     audio_dedup_clusters,
-    audio_fingerprints,
+    audio_signatures,
     audio_verify_pairs,
 )
 from lsh_hdc_spark.sources.clips import synth_clips, true_family
+
+
+def _fingerprints(clips):
+    """(clip_id, key) — one row per multi-probe bucket key of a clip."""
+    return audio_signatures(clips).select("clip_id", F.explode("keys").alias("key"))
 
 
 def _expected_labels(n):
@@ -48,7 +53,7 @@ def test_end_to_end_matches_ground_truth(spark):
 
 def test_family_members_share_a_bucket_key(spark):
     n = 80
-    fps = audio_fingerprints(synth_clips(spark, n, seed=7)).collect()
+    fps = _fingerprints(synth_clips(spark, n, seed=7)).collect()
     keys = {}
     for r in fps:
         keys.setdefault(r.clip_id, set()).add(r.key)
@@ -62,7 +67,7 @@ def test_family_members_share_a_bucket_key(spark):
 
 def test_multi_probe_fanout_bounded(spark):
     fps = (
-        audio_fingerprints(synth_clips(spark, 120, seed=3))
+        _fingerprints(synth_clips(spark, 120, seed=3))
         .groupBy("clip_id")
         .count()
         .agg(F.max("count").alias("mx"), F.min("count").alias("mn"))
@@ -105,7 +110,7 @@ def test_bucket_cap_drops_with_census(spark):
         "clip_id string, bytes binary, sr_hz int, dur_ms int, "
         "codec string, transcript string",
     )
-    fps = audio_fingerprints(clips).localCheckpoint(eager=True)
+    fps = _fingerprints(clips).localCheckpoint(eager=True)
     census = {r.tier: r for r in audio_bucket_census(fps, bucket_cap=5).collect()}
     assert "dropped" in census and census["dropped"].max_bucket == 10
     assert audio_candidate_pairs(fps, bucket_cap=5).count() == 0
@@ -156,9 +161,9 @@ def test_mask_keys_noise_invariance():
 def test_plan_bytes_cross_exactly_two_scans(spark, tmp_path):
     """Scale-shape invariant from the module docstring: reading from
     parquet, the byte column appears in exactly TWO scans across the
-    whole job — the fingerprint pass and the candidate-bytes semi-join
-    fetch (both materialize eagerly, so they are separate jobs; the
-    FINAL labeling plan must contain no byte-bearing scan at all)."""
+    whole job — the signature pass and the candidate-bytes semi-join
+    fetch (both run inside the fetch's eager pin, before CC; the FINAL
+    labeling plan must contain no byte-bearing scan at all)."""
     path = str(tmp_path / "clips")
     synth_clips(spark, 40, seed=5).write.mode("overwrite").parquet(path)
     out = audio_dedup_clusters(spark.read.parquet(path))

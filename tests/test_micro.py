@@ -120,10 +120,10 @@ def test_streaming_attach_rebuild_invariant_under_micro(
     among them, back to the epoch sinks.  Batches are parquet-backed, as a
     file stream's are: a createDataFrame batch has no finite size estimate
     and would never take the micro branch."""
+    from lsh_hdc_spark.plans import pipeline
     from lsh_hdc_spark.streaming import (
         StreamIndex,
         attach_batch,
-        ingest,
         rebuild_index,
         write_index_epoch,
     )
@@ -135,7 +135,8 @@ def test_streaming_attach_rebuild_invariant_under_micro(
         rebound.append((df.sparkSession, micro))
         return out, micro
 
-    monkeypatch.setattr(ingest, "micro_rebound", spy)
+    # attach sizes its in-batch pass through the clustering core
+    monkeypatch.setattr(pipeline, "micro_rebound", spy)
 
     cfg = DedupConfig()
     rows = [
@@ -189,3 +190,75 @@ def test_ann_paths_rows_invariant_under_micro(spark, wide):
     ) == _rows(
         cosine_dup_edges(embs_w, 0.9).withColumn("cosine", F.round("cosine", 9))
     )
+
+
+def test_cloned_sessions_keep_caller_runtime_conf(wide, monkeypatch):
+    """Both session clones — micro_rebound's and the CC star loop's —
+    carry the caller's runtime SQL conf, not only its builder-time conf
+    (a bare newSession() reverts spark.conf.set values)."""
+    from lsh_hdc_spark.operators import cc
+
+    conf = {
+        "spark.sql.session.timeZone": "America/Los_Angeles",
+        "spark.sql.caseSensitive": "true",
+    }
+    seen = []
+    converged = cc._is_converged
+
+    def spy(e):
+        seen.append({k: e.sparkSession.conf.get(k) for k in conf})
+        return converged(e)
+
+    monkeypatch.setattr(cc, "_is_converged", spy)
+    monkeypatch.setattr(cc, "LOCAL_MAX_EDGES", 0)  # force the star loop
+    old = {k: wide.conf.get(k) for k in conf}
+    for k, v in conf.items():
+        wide.conf.set(k, v)
+    try:
+        out, micro = micro_rebound(wide.read.parquet(f"{SF}/documents.parquet"))
+        assert micro is True
+        assert {k: out.sparkSession.conf.get(k) for k in conf} == conf
+
+        edges = wide.createDataFrame([(1, 2), (2, 3), (5, 6)], "src long, dst long")
+        got = sorted(tuple(r) for r in cc.connected_components(edges).collect())
+        assert got == [(1, 1), (2, 1), (3, 1), (5, 5), (6, 5)]
+        assert seen and all(s == conf for s in seen)
+    finally:
+        for k, v in old.items():
+            wide.conf.set(k, v)
+
+
+def test_clustering_entries_return_caller_session_frames(wide, tmp_path, monkeypatch):
+    """run_pipeline, audio_dedup_clusters and fused_dedup_clusters hand
+    their labels back to the caller's session when the micro branch runs.
+    The input is parquet-backed: a createDataFrame/synth_clips frame has no
+    finite size estimate, so micro would never fire."""
+    from lsh_hdc_spark.config import CLIPS
+    from lsh_hdc_spark.operators.audio_dedup import (
+        audio_dedup_clusters,
+        fused_dedup_clusters,
+    )
+    from lsh_hdc_spark.plans import pipeline
+    from lsh_hdc_spark.sources.clips import synth_clips
+
+    path = str(tmp_path / "clips")
+    synth_clips(wide, 40, seed=5).write.parquet(path)
+    rebound = []
+
+    def spy(df):
+        out, micro = micro_rebound(df)
+        rebound.append(micro)
+        return out, micro
+
+    monkeypatch.setattr(pipeline, "micro_rebound", spy)
+    entries = {
+        "run_pipeline": lambda c: pipeline.run_pipeline(c, CLIPS),
+        "audio_dedup_clusters": audio_dedup_clusters,
+        "fused_dedup_clusters": fused_dedup_clusters,
+    }
+    for name, entry in entries.items():
+        rebound.clear()
+        out = entry(wide.read.parquet(path))
+        assert out.sparkSession is wide, name
+        assert rebound == [True], name
+        assert out.count() == 40, name

@@ -179,3 +179,48 @@ def test_clips_bytes_cross_exactly_one_scan(spark, tmp_path):
         assert "sr_hz" not in s and "codec" not in s, s
     rows = out.count()
     assert rows == 50
+
+
+@pytest.mark.parametrize("axes", ["text", "audio", "fused"])
+def test_batch_entry_equals_attach_on_empty_index(spark, tmp_path, axes):
+    """The contract the clustering core shares between batch and stream:
+    on an empty index, attaching a corpus as one batch labels it exactly
+    as the batch entry over the same axes does."""
+    from lsh_hdc_spark.config import CLIPS
+    from lsh_hdc_spark.operators.audio_dedup import (
+        audio_dedup_clusters,
+        fused_dedup_clusters,
+    )
+    from lsh_hdc_spark.sources.clips import synth_clips
+    from lsh_hdc_spark.streaming import (
+        FusedStreamIndex,
+        StreamIndex,
+        attach_audio_batch,
+        attach_batch,
+        attach_fused_batch,
+    )
+
+    path = str(tmp_path / "clips")
+    synth_clips(spark, 120, seed=5).write.parquet(path)
+    index = StreamIndex(*(str(tmp_path / d) for d in ("sig", "labels", "keys")))
+    fused = FusedStreamIndex.at(str(tmp_path / "fused"))
+    batch, attach = {
+        "text": (
+            lambda c: run_pipeline(c, CLIPS),
+            lambda c: attach_batch(c, CLIPS, index),
+        ),
+        "audio": (audio_dedup_clusters, lambda c: attach_audio_batch(c, index)),
+        "fused": (
+            fused_dedup_clusters,
+            lambda c: attach_fused_batch(c, CLIPS, fused),
+        ),
+    }[axes]
+
+    def labels(df):
+        return {(r.clip_id, r.cluster_id) for r in df.collect()}
+
+    want = labels(batch(spark.read.parquet(path)).select("clip_id", "cluster_id"))
+    got = labels(attach(spark.read.parquet(path))[0])
+    assert got == want
+    # non-vacuous: every clip labelled, and duplicates merged
+    assert len(want) == 120 and len({c for _, c in want}) < 120
