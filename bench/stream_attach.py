@@ -9,10 +9,12 @@ into sequential micro-batches (default 4 x 5k), driven through
   - attach_fused_batch  (text + audio axes into one shared label space)
 
 Each batch is timed separately (the index GROWS across batches, so
-per-batch time trends are the honest number for a long-running stream —
-a flat trend means the pfx-pruned index probe is doing its job; a rising
-trend would expose an accidental full-index rescan).  Per-run steal/sy
-annotations follow the bench.py protocol.
+per-batch time trends are the honest number for a long-running stream).
+The index probe is a plain key join over the whole epoch-partitioned keys
+table (ids and keys only, no arrays), run with the same number of Spark
+jobs at every epoch; a trend rising faster than that key scan grows
+would expose an array-table rescan or per-epoch job growth.  Per-run
+steal/sy annotations follow the bench.py protocol.
 
 Usage:  python bench/stream_attach.py [n_clips] [n_batches]
 Writes one JSON line to stdout; progress to stderr.

@@ -35,15 +35,17 @@ as any streaming union-find).
 Scale design (10^12-row index, SURVEY.md §4):
  - each axis's index is THREE tables, so the heavy things never meet a
    shuffle they don't need:
-     keys_dir   (pfx, key, id, cluster_id)  — pre-exploded keys,
-                directory-partitioned by pfx = hash(key) % N; the
-                stream-static join probes THIS table only.  In production
-                this layout is Iceberg `bucket(N, key)` and the join
-                is storage-partitioned (SPJ): the index side never
-                shuffles, only the micro-batch side is routed to buckets.
-                Under plain parquet (no Iceberg jar offline) the same
-                layout gives partition PRUNING: each batch reads only the
-                pfx partitions its own keys hash into.
+     keys_dir   (key, id, cluster_id)  — pre-exploded keys, partitioned by
+                epoch only, like the other two tables; the stream-static
+                join probes THIS table only.  In production this table is
+                Iceberg `bucket(N, key)` and the join is storage-partitioned
+                (SPJ): the index side never shuffles, only the micro-batch
+                side is routed to buckets.  Under plain parquet the keys
+                are not split by key hash: a directory prune saved little
+                (a 25-row batch's band keys already hash into 44-49 of 64
+                prefixes), while every epoch dir holding more than 32
+                prefix dirs cost one Spark listing job per read, and each
+                sink wrote one file per prefix.
      sig_dir    (id, signature columns, cluster_id) — the arrays, keyed by
                 id; joined only against the DISTINCT candidate-id set (the
                 verify_pairs/ann_topk pattern from operators/pairs.py), so
@@ -91,33 +93,24 @@ from functools import partial, reduce
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ..config import DedupConfig
 from ..micro import micro_rebound
 from ..operators.cc import assign_clusters
 from ..plans.pipeline import TEXT_KEYS, Axis, _cluster, _text_cluster, _union, text_axis
 
-#: key hash-partition fanout for keys_dir (plain-parquet stand-in for
-#: Iceberg bucket(N, key)).  64 keeps directory counts sane at sandbox
-#: scale; a 10^12-row deployment would use 4096+ Iceberg buckets.
-N_KEY_PARTITIONS = 64
-
 #: epoch used for pre-stream seeding and rebuild output (real stream
 #: epochs are >= 0)
 SEED_EPOCH = -1
 
 
-def _pfx(col):
-    return F.pmod(F.xxhash64(col), F.lit(N_KEY_PARTITIONS))
-
-
 @dataclass(frozen=True)
 class StreamIndex:
     """On-disk state of one axis (see module docstring for the three-table
-    layout).  All three are plain parquet here, partitioned by epoch
-    (keys_dir additionally by pfx); the layout contract is
-    epoch-partitioned dynamic overwrite — append-only across epochs,
-    idempotent within one."""
+    layout).  All three are plain parquet here, partitioned by epoch only;
+    the layout contract is epoch-partitioned dynamic overwrite —
+    append-only across epochs, idempotent within one."""
 
     sig_dir: str
     labels_dir: str
@@ -127,17 +120,34 @@ class StreamIndex:
         """True when keys_dir holds a committed data file.  Checked per
         call from the filesystem, so an index deleted or recreated at the
         same path reads as it is now; a keys dir with no committed file
-        (staging dirs are dot-prefixed) reads as absent."""
-        pattern = os.path.join(
-            glob.escape(self.keys_dir), "epoch=*", "pfx=*", "*.parquet"
-        )
+        (staging dirs are dot-prefixed) reads as absent.  Raises on a keys
+        dir still split into ``epoch=*/pfx=*`` prefix dirs (the earlier
+        layout), which would otherwise read as absent and match nothing."""
+        keys = glob.escape(self.keys_dir)
+        if next(glob.iglob(os.path.join(keys, "epoch=*", "pfx=*")), None):
+            raise RuntimeError(
+                f"{self.keys_dir} holds pfx= key partitions, a layout attach "
+                "no longer reads; run rebuild_index, rebuild_audio_index or "
+                "rebuild_fused_index (whichever built this index) to rewrite "
+                "its keys table by epoch"
+            )
+        pattern = os.path.join(keys, "epoch=*", "*.parquet")
         return next(glob.iglob(pattern), None) is not None
 
-    def read_keys(self, spark: SparkSession) -> DataFrame:
-        return spark.read.parquet(self.keys_dir)
+    def read_keys(
+        self, spark: SparkSession, schema: StructType | None = None
+    ) -> DataFrame:
+        """The keys table; given the `schema` of the columns to read (epoch
+        still comes from the path), no schema-inference job runs."""
+        reader = spark.read if schema is None else spark.read.schema(schema)
+        return reader.parquet(self.keys_dir)
 
-    def read_sigs(self, spark: SparkSession) -> DataFrame:
-        return spark.read.parquet(self.sig_dir)
+    def read_sigs(
+        self, spark: SparkSession, schema: StructType | None = None
+    ) -> DataFrame:
+        """The signatures table; `schema` as for read_keys."""
+        reader = spark.read if schema is None else spark.read.schema(schema)
+        return reader.parquet(self.sig_dir)
 
     def read_labels(self, spark: SparkSession) -> DataFrame:
         return spark.read.parquet(self.labels_dir)
@@ -149,14 +159,13 @@ def _write_epoch(df: DataFrame, path: str, epoch: int, parts: list[str]) -> None
     epoch cannot duplicate rows (ADVICE r3: the previous append-mode sinks
     were not idempotent).
 
-    Determinism assumption (ADVICE r4): idempotency relies on a retried
-    epoch producing the SAME partition set as the failed attempt — true
-    here because foreachBatch replays the identical file list and every
-    stage (signing, banding, pfx hashing) is deterministic.  If batch
-    content or config could change between attempts, a retry with a
-    smaller pfx set would leave the failed attempt's extra partitions
-    stale; a transactional table format (Iceberg REPLACE) removes the
-    assumption entirely."""
+    Every index table is partitioned by epoch alone, so an epoch is one
+    partition per table and a retry replaces all of it.  The one gap
+    (ADVICE r4): a retry that writes NO rows to a table (batch content or
+    config changed between attempts) replaces nothing there, leaving the
+    failed attempt's rows; foreachBatch replays the identical file list and
+    every stage is deterministic, so this does not arise here.  A
+    transactional table format (Iceberg REPLACE) removes the gap."""
     (
         df.withColumn("epoch", F.lit(epoch))
         .write.mode("overwrite")
@@ -170,13 +179,11 @@ def _write_sig_epoch(
     rows: DataFrame, index: StreamIndex, id_col: str, epoch: int, keys: tuple[str, str]
 ) -> None:
     """Append one epoch's labeled signatures to sig_dir, and their
-    pre-exploded key rows (pfx, key, id, cluster_id) to keys_dir."""
+    pre-exploded key rows (key, id, cluster_id) to keys_dir."""
     arr, key = keys
-    key_rows = rows.select(
-        F.col(id_col), "cluster_id", F.explode(arr).alias(key)
-    ).withColumn("pfx", _pfx(key))
+    key_rows = rows.select(F.col(id_col), "cluster_id", F.explode(arr).alias(key))
     _write_epoch(rows, index.sig_dir, epoch, ["epoch"])
-    _write_epoch(key_rows, index.keys_dir, epoch, ["epoch", "pfx"])
+    _write_epoch(key_rows, index.keys_dir, epoch, ["epoch"])
 
 
 def write_index_epoch(
@@ -230,37 +237,35 @@ def _best_match(
     Shuffle discipline (VERDICT r3 items 1-2): the key join moves ids
     only; the verify columns are fetched AFTER the distinct candidate set,
     once per (new, indexed) pair — the verify_pairs pattern (pairs.py).
-    The key index is read pruned to the pfx partitions the batch's own
-    keys hash into (collecting the <= N_KEY_PARTITIONS distinct prefixes
-    is one tiny driver action on an already-materialized frame;
-    production = Iceberg bucket pruning / storage-partitioned join, no
-    driver hop)."""
+    The match is a plain key join against the whole keys table (production:
+    Iceberg bucket(N, key) with a storage-partitioned join).  The keys
+    table carries no key-hash prefix dirs to prune: a batch's keys hash
+    into most prefixes, so the prune read little less, while its per-epoch
+    prefix dirs cost a listing job per epoch on every read and a collect
+    of the batch's prefixes.  Both tables are read with a
+    schema built from the batch's own signatures (signed by the same axis,
+    so the column types match), so neither read runs a schema-inference
+    job."""
     spark = sigs.sparkSession
     arr, key = ax.keys
-    new_keys = sigs.select(
-        F.col(id_col).alias("_nid"), F.explode(arr).alias(key)
-    ).withColumn("pfx", _pfx(key))
-
-    pfxs = [r["pfx"] for r in new_keys.select("pfx").distinct().collect()]
-    idx_keys = (
-        index.read_keys(spark)
-        .where(F.col("pfx").isin(pfxs))
-        .select(
-            "pfx",
-            key,
-            F.col(id_col).alias("_iid"),
-            F.col("cluster_id").alias("_icluster"),
-        )
+    new_keys = sigs.select(F.col(id_col).alias("_nid"), F.explode(arr).alias(key))
+    # the keys table's columns, typed as the batch's (cluster labels are ids)
+    keys_schema = sigs.select(
+        id_col, F.col(id_col).alias("cluster_id"), F.explode(arr).alias(key)
+    ).schema
+    idx_keys = index.read_keys(spark, keys_schema).select(
+        key, F.col(id_col).alias("_iid"), F.col("cluster_id").alias("_icluster")
     )
     # ids only through the shuffle; (_iid -> _icluster) is functional, so
     # distinct on the pair triple dedups key multiplicity
     cand = (
-        new_keys.join(idx_keys, ["pfx", key])
+        new_keys.join(idx_keys, key)
         .select("_nid", "_iid", "_icluster")
         .distinct()
     )
     new_arr = sigs.select(F.col(id_col).alias("_nid"), F.struct(*ax.fetch).alias("_n"))
-    idx_arr = index.read_sigs(spark).select(
+    fetched = sigs.select(id_col, *ax.fetch).schema
+    idx_arr = index.read_sigs(spark, fetched).select(
         F.col(id_col).alias("_iid"), F.struct(*ax.fetch).alias("_i")
     )
     score, ok = ax.score(F.col("_n"), F.col("_i"))
@@ -518,9 +523,11 @@ def _verify_index_health(indexes) -> None:
     cluster labels that no longer exist in the labels table.  The labels
     table is deliberately NOT part of the presence check: it is
     legitimately absent on a fresh index and shared across fused
-    sub-indexes."""
+    sub-indexes.  A keys table in the earlier prefix-dir layout raises
+    (StreamIndex.exists) until a rebuild rewrites it."""
     for ix in indexes:
         _recover_swap(ix)
+        ix.exists()  # raises on a keys table in the earlier prefix layout
         present = {
             d: os.path.exists(d) for d in (ix.sig_dir, ix.keys_dir)
         }

@@ -1,12 +1,14 @@
 """Structured-Streaming incremental ingest (streaming twin of op 14):
 attach semantics, within-batch clustering, cross-batch index growth,
 checkpoint-based resume, idempotent epoch writes, the scale-shaped index
-layout (pruned key reads, id-only band shuffle), and the rebuild_index
-compaction hook (the north rule's "resumable" requirement applied to the
-steady-state ingest path)."""
+layout (id-only key reads and band shuffle, a job count per epoch that
+does not grow with the index), and the rebuild_index compaction hook
+(the north rule's "resumable" requirement applied to the steady-state
+ingest path)."""
 
 import json
 import os
+import re
 import shutil
 
 import pytest
@@ -85,12 +87,22 @@ def test_attach_batch_empty_index(spark, index):
     assert got[1] == got[2] == 1 and got[3] == 3
 
 
+def _scan_fields(plan: str, path: str) -> list[set[str]]:
+    """Field names of each parquet scan's ReadSchema over table `path`, from
+    a formatted plan (one set per scan)."""
+    return [
+        set(re.findall(r"(\w+):", b.split("ReadSchema: ")[1].split("\n")[0]))
+        for b in plan.split("\n\n")
+        if "Scan parquet" in b and f"{path}]" in b
+    ]
+
+
 def test_index_match_plan_shape(spark, index):
     """Scale shape of the attach join (VERDICT r3 items 1-2): the key-index
-    scan is PRUNED to the batch's pfx partitions, carries no shingle
-    arrays (ids/cluster only), and the arrays table is scanned exactly once
-    on the index side — fetched per distinct candidate pair, not per band
-    key."""
+    scan reads only (key, id, cluster_id) — no shingle arrays — and the
+    arrays table is scanned exactly once on the index side, reading only
+    the axis's fetch columns: fetched per distinct candidate pair, not per
+    band key."""
     _seed(spark, index)
     from lsh_hdc_spark.functions.sign import signed
 
@@ -104,23 +116,13 @@ def test_index_match_plan_shape(spark, index):
         best._jdf.queryExecution(), "formatted"
     )
 
-    # keys scan: partition-pruned on pfx, schema has no array column
-    keys_scans = [
-        b for b in plan.split("\n\n") if "keys" in b and "Scan parquet" in b
-    ]
-    assert keys_scans, plan
-    assert any("pfx" in b and ("PartitionFilters" in b) for b in keys_scans), plan
-    assert all("shingles_h" not in b for b in keys_scans), plan
+    # one keys scan, ids and cluster only
+    keys_read = _scan_fields(plan, index.keys_dir)
+    assert keys_read == [{"doc_id", "cluster_id", "band_key"}], plan
     # the arrays live in the sig table, scanned exactly once for the index
-    # side (plus zero times for the batch side — it is a checkpointed RDD)
-    sig_scans = [
-        b
-        for b in plan.split("\n\n")
-        if "Scan parquet" in b and "shingles_h" in b
-    ]
-    assert len(sig_scans) == 1, plan
-    # and it reads only (id, shingles_h): sketch/band_keys stay unread
-    assert "sketch" not in sig_scans[0], sig_scans[0]
+    # side (plus zero times for the batch side — it is a checkpointed RDD),
+    # reading only (id, shingles_h): sketch/band_keys stay unread
+    assert _scan_fields(plan, index.sig_dir) == [{"doc_id", "shingles_h"}], plan
 
 
 def test_epoch_write_idempotent(spark, index):
@@ -241,6 +243,129 @@ def test_attach_sees_index_deleted_and_recreated(spark, index):
     _seed(spark, index)
     labels, _ = attach_batch(batch, CFG, index)
     assert labels.collect()[0].cluster_id == 1
+
+
+def _to_prefix_layout(spark, index):
+    """Rewrite the keys table in the earlier (epoch, pfx) layout: one dir
+    per key-hash prefix inside each epoch dir."""
+    legacy = index.keys_dir + ".legacy"
+    (
+        spark.read.parquet(index.keys_dir)
+        .withColumn("pfx", F.pmod(F.xxhash64("band_key"), F.lit(64)))
+        .write.partitionBy("epoch", "pfx")
+        .parquet(legacy)
+    )
+    shutil.rmtree(index.keys_dir)
+    os.rename(legacy, index.keys_dir)
+
+
+def test_prefix_layout_index_refused_until_rebuilt(spark, index, tmpdirs):
+    """A keys table still in the earlier (epoch, pfx) layout has no data
+    file directly under an epoch dir, so it would read as absent and attach
+    would match nothing.  Instead presence raises, naming the rebuilds, for
+    an attach and for a stream start (which lets its lease go); a rebuild
+    reads only the sig and labels tables and rewrites the keys by epoch,
+    after which attach adopts from the index again."""
+    from lsh_hdc_spark.streaming.ingest import _lock_path
+
+    _seed(spark, index)
+    _to_prefix_layout(spark, index)
+    batch = spark.createDataFrame(
+        [(10, "the quick brown fox jumps over the lazy dog near the river bank")],
+        SCHEMA,
+    )
+    calls = [
+        index.exists,
+        lambda: attach_batch(batch, CFG, index),
+        lambda: run_attach_stream(
+            spark, tmpdirs["src"], SCHEMA, CFG, index, tmpdirs["ckpt"]
+        ),
+    ]
+    for call in calls:
+        with pytest.raises(
+            RuntimeError,
+            match="rebuild_index, rebuild_audio_index or rebuild_fused_index",
+        ):
+            call()
+    assert not os.path.exists(_lock_path(index))
+
+    rebuild_index(spark, CFG, index)
+    assert index.exists()
+    assert not any("pfx=" in d for d, _, _ in os.walk(index.keys_dir))
+    labels, _ = attach_batch(batch, CFG, index)
+    assert labels.collect()[0].cluster_id == 1
+
+
+def _group_jobs(spark, group: str) -> list[tuple[str, bool]]:
+    """(description, ran inside a SQL execution) of each job in `group`.
+    A reader that lists files in parallel or infers a parquet schema runs
+    its job while it builds the relation, outside any SQL execution."""
+    sc = spark.sparkContext
+    jsc = sc._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    executions = spark._jsparkSession.sharedState().statusStore().executionsList()
+    in_sql = set()
+    for k in range(executions.size()):
+        ids = executions.apply(k).jobs().keys().mkString(",")
+        in_sql.update(int(j) for j in ids.split(",") if j)
+    out = []
+    for j in sorted(sc.statusTracker().getJobIdsForGroup(group)):
+        desc = jsc.statusStore().job(j).description()
+        out.append((desc.get() if desc.isDefined() else "", j in in_sql))
+    return out
+
+
+def test_attach_jobs_flat_across_epochs(spark, index):
+    """Each attach epoch (the foreachBatch body: attach, labels sink, index
+    sinks) runs the same number of Spark jobs however many epochs the index
+    already holds, and none of them lists files or infers a parquet schema:
+    the keys table has one dir per epoch, not one per key-hash prefix per
+    epoch (Spark lists a dir of more than 32 subdirs with a job of its
+    own), and both index reads carry a schema."""
+    import random
+
+    from lsh_hdc_spark.streaming.ingest import _attach_epoch
+
+    rng = random.Random(5)
+    words = [f"w{i}" for i in range(500)]
+
+    def text():
+        return " ".join(rng.choice(words) for _ in range(24))
+
+    # 33 seed docs and 12-row batches: at 64 key-hash prefixes each epoch
+    # dir would hold more than 32 prefix dirs
+    seed_index(
+        spark,
+        spark.createDataFrame(BASE + [(100 + i, text()) for i in range(30)], SCHEMA),
+        CFG,
+        index,
+    )
+    sc = spark.sparkContext
+    per_epoch = []
+    for epoch in range(4):
+        # same shape every epoch: a near-dup of an indexed doc, a novel
+        # pair, nine singletons
+        pair, lo = text(), 1000 * (epoch + 1)
+        rows = [(lo, BASE[0][1]), (lo + 1, pair), (lo + 2, pair)]
+        rows += [(lo + 3 + i, text()) for i in range(9)]
+        batch = spark.createDataFrame(rows, SCHEMA)
+        group = f"attach-epoch-{epoch}"
+        sc.setJobGroup(group, group)
+        try:
+            _attach_epoch(batch, epoch, CFG.id_col, [(text_axis(CFG), index)])
+        finally:
+            sc._jsc.clearJobGroup()
+        per_epoch.append(_group_jobs(spark, group))
+
+    counts = [len(jobs) for jobs in per_epoch]
+    assert len(set(counts[1:])) == 1, counts
+    for jobs in per_epoch:
+        assert not [d for d, _ in jobs if d.startswith("Listing leaf files")], jobs
+        assert all(in_sql for _, in_sql in jobs), jobs
+    got = dict(
+        spark.read.parquet(index.labels_dir).select("doc_id", "cluster_id").collect()
+    )
+    assert all(got[1000 * (e + 1)] == 1 for e in range(4))  # each adopted
 
 
 def test_stream_resume_skips_committed_files(spark, index, tmpdirs):

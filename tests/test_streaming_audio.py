@@ -5,6 +5,7 @@ arrives last), the sketch-only index contract, the stream-drain path, and
 the shared rebuild/stream lease."""
 
 import os
+import re
 
 import numpy as np
 import pytest
@@ -176,10 +177,10 @@ def test_run_audio_attach_stream_drains(spark, index, tmp_path):
 
 def test_audio_index_match_plan_shape(spark, index):
     """Scale shape of the audio attach join (mirrors the text path's
-    test_index_match_plan_shape): the key-index scan is PRUNED to the
-    batch's pfx partitions and carries no array columns; the profile table
-    is scanned exactly once, reading only (id, spec, n_samples) — the
-    stored keys stay unread."""
+    test_index_match_plan_shape): the key-index scan reads only (key, id,
+    cluster_id) — no array columns; the profile table is scanned exactly
+    once, reading only (id, spec, n_samples) — the stored keys stay
+    unread."""
     from lsh_hdc_spark.operators.audio_dedup import audio_signatures
     from lsh_hdc_spark.streaming.audio_ingest import audio_axis
     from lsh_hdc_spark.streaming.ingest import _best_match
@@ -192,17 +193,15 @@ def test_audio_index_match_plan_shape(spark, index):
         best._jdf.queryExecution(), "formatted"
     )
 
-    keys_scans = [
-        b for b in plan.split("\n\n") if "keys" in b and "Scan parquet" in b
-    ]
-    assert keys_scans, plan
-    assert any("pfx" in b and "PartitionFilters" in b for b in keys_scans), plan
-    assert all("spec" not in b for b in keys_scans), plan
-    sig_scans = [
-        b for b in plan.split("\n\n") if "Scan parquet" in b and "spec" in b
-    ]
-    assert len(sig_scans) == 1, plan
-    assert "keys" not in sig_scans[0].split("ReadSchema")[-1], sig_scans[0]
+    def scan_fields(path):
+        return [
+            set(re.findall(r"(\w+):", b.split("ReadSchema: ")[1].split("\n")[0]))
+            for b in plan.split("\n\n")
+            if "Scan parquet" in b and f"{path}]" in b
+        ]
+
+    assert scan_fields(index.keys_dir) == [{"clip_id", "cluster_id", "key"}], plan
+    assert scan_fields(index.sig_dir) == [{"clip_id", "spec", "n_samples"}], plan
 
 
 def test_seed_then_attach(spark, index):
